@@ -27,6 +27,7 @@ from typing import Callable, Dict, Iterable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 ID_SHIFT = 44  # 2^44 rows per label; 2^19 labels
 _ID = "_id"
@@ -40,6 +41,41 @@ def global_id(ordinal: int, key_col):
     """Deterministic global id: shuffle-free, stable across runs."""
     return (F.lit(int(ordinal)).cast("long") * F.lit(1 << ID_SHIFT) +
             key_col.cast("long"))
+
+
+def _literal(value, dtype):
+    """``value`` as a Column literal of ``dtype`` (nested values recurse)."""
+    if value is None:
+        return F.lit(None).cast(dtype)
+    if isinstance(dtype, T.ArrayType):
+        return F.array(*[_literal(v, dtype.elementType)
+                         for v in value]).cast(dtype)
+    if isinstance(dtype, T.MapType):
+        return F.create_map(*[c for k, v in value.items()
+                              for c in (_literal(k, dtype.keyType),
+                                        _literal(v, dtype.valueType))]
+                            ).cast(dtype)
+    if isinstance(dtype, T.StructType):
+        vals = ([value.get(f.name) for f in dtype.fields]
+                if isinstance(value, dict) else list(value))
+        return F.struct(*[_literal(v, f.dataType).alias(f.name)
+                          for v, f in zip(vals, dtype.fields)])
+    return F.lit(value).cast(dtype)
+
+
+def literal_rows(spark: SparkSession, rows: list, schema=None) -> DataFrame:
+    """A small driver-side row list as a JVM-only relation: one literal
+    array inlined over a one-row range, so no job that reads it starts a
+    Python worker (``createDataFrame(rows)`` is a Python RDD). ``schema``
+    (a StructType or DDL string) defaults to the one
+    ``createDataFrame(rows)`` infers."""
+    if schema is None:
+        schema = spark._inferSchemaFromList(rows, names=None)
+    elif isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    rows_col = F.array(*[_literal(r, schema) for r in rows])
+    return spark.range(0, 1, 1, 1).select(
+        F.inline(rows_col.cast(T.ArrayType(schema, False))))
 
 
 @dataclass
@@ -82,8 +118,10 @@ class GraphCatalog:
         self._ordinals: Dict[str, int] = {}
         self.indexes: Dict[tuple, IndexEntry] = {}
         # search-index materializations keyed (kind, target, label, prop);
-        # populated by operators/search.py + similarity.py, invalidated here
-        # on any write to the label so post-write searches never see stale hits
+        # populated by operators/search.py + similarity.py. A write to the
+        # label drops its entries so post-write searches never see stale
+        # hits, except that an in-memory node BM25 index absorbs a literal
+        # AddN append (search.bm25_append) and stays
         self._materialized: Dict[tuple, object] = {}
         # labels mutated since the last durability checkpoint — the
         # x-helix-await-durable analogue (server.py): an awaiting write
@@ -171,9 +209,13 @@ class GraphCatalog:
         return self._ordinals[label]
 
     def add_nodes(self, label: str, df: DataFrame,
-                  key_col: Optional[str] = None) -> None:
+                  key_col: Optional[str] = None,
+                  rows: Optional[list] = None) -> None:
         """Register a node table. ``key_col`` (unique long) derives _id;
-        if absent the table must already carry _id."""
+        if absent the table must already carry _id. ``rows`` are the
+        property dicts ``df`` holds when it is a small literal write
+        (AddN); search indexes that can absorb them are extended instead
+        of dropped."""
         if key_col is not None:
             df = df.withColumn(_ID, global_id(self.ordinal(label), F.col(key_col)))
         elif _ID not in df.columns:
@@ -184,7 +226,9 @@ class GraphCatalog:
                 df, allowMissingColumns=True)
         else:
             self._nodes[label] = df
+        absorbed = self._absorb_append(label, rows) if rows else {}
         self.invalidate_label(label)
+        self._materialized.update(absorbed)
         self._dirty.add(("node", label))
         # the active config's secondary_indices apply to labels
         # registered AFTER configure() too (the reference maintains its
@@ -392,10 +436,27 @@ class GraphCatalog:
                 except Exception:
                     pass
 
+    def _absorb_append(self, label: str, rows: list) -> dict:
+        """Extend the node BM25 indexes of ``label`` by appended ``rows``;
+        returns {key: entry} of those that absorbed them, taken out of the
+        cache so invalidate_label leaves them alone. Entries are updated
+        in place (never via cache_materialized, whose supersede path would
+        unpersist the shared base frames)."""
+        from .operators.search import bm25_append
+
+        out = {}
+        for key in list(self._materialized):
+            if (key[:3] == ("bm25", "nodes", label)
+                    and bm25_append(self._materialized[key], key[3], rows)):
+                out[key] = self._materialized.pop(key)
+        return out
+
     def invalidate_label(self, label: Optional[str]) -> None:
         """Drop materialized search indexes for ``label`` (all labels when
         None) so vector/text/LSH search after a write rebuilds fresh. Keys
-        are (kind, target, label, prop) per operators/search.py."""
+        are (kind, target, label, prop) per operators/search.py. Every
+        write path calls this; add_nodes first sets aside the entries that
+        absorbed its appended rows."""
         for key in list(self._materialized):
             if label is not None and len(key) > 2 and key[2] != label:
                 continue

@@ -7,6 +7,8 @@ documented so oracle SQL can reproduce it exactly
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -16,6 +18,13 @@ TOKEN_SPLIT = "[^a-z0-9]+"
 def tokens(text: Column) -> Column:
     """lower -> split on non-alphanumeric -> drop empties."""
     return F.filter(F.split(F.lower(text), TOKEN_SPLIT), lambda t: t != "")
+
+
+def token_list(text: str) -> list:
+    """Driver-side replica of tokens() for one string (BM25 query terms,
+    appended documents). Equal to the JVM expression on ASCII text;
+    Java and Python lowercase some non-ASCII characters differently."""
+    return [t for t in re.split(TOKEN_SPLIT, text.lower()) if t]
 
 
 def char_shingles(text: Column, n: int = 3) -> Column:

@@ -23,19 +23,24 @@ query error; unknown tenant => empty; enforced here.
 from __future__ import annotations
 
 import math
+from collections import Counter
 from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..catalog import _ID
-from ..functions.text import TOKEN_SPLIT, tokens
+from ..catalog import _ID, literal_rows
+from ..functions.text import token_list, tokens
 from ..functions.vector import cosine_distance, norm
 
 _DIST = "_distance"
 
 BM25_K1 = 1.2
 BM25_B = 0.75
+# postings rows an in-memory BM25 index takes as a driver-held delta
+# (bm25_append) before the next append drops it for a rebuild
+BM25_DELTA_MAX = 512
+_POSTINGS_SCHEMA = "term string, _id long, tf long, dl long"
 
 
 # ---------------------------------------------------------------------------
@@ -187,7 +192,8 @@ def build_text_index(compiler, label: str, prop: str,
     """Postings (term, _id, tf, dl) + term doc-frequencies + corpus stats.
 
     At 100 TB the postings table is written bucketed by term so probe joins
-    are shuffle-free; here it persists in memory.
+    are shuffle-free; here it persists in memory. Documents appended since
+    the build live in the stats' driver-held delta (bm25_append).
     """
     cat = compiler.cat
     key = ("bm25", target, label, prop)
@@ -222,20 +228,67 @@ def build_text_index(compiler, label: str, prop: str,
     term_df = postings.groupBy("term").agg(
         F.countDistinct(_ID).alias("df")).persist()
     stats_row = dl.agg(F.count(F.lit(1)).alias("n"),
-                       F.avg("dl").alias("avgdl")).head()
-    stats = {"N": stats_row["n"] or 0, "avgdl": stats_row["avgdl"] or 1.0}
+                       F.avg("dl").alias("avgdl"),
+                       F.sum("dl").alias("dl_sum")).head()
+    stats = {"N": stats_row["n"] or 0, "avgdl": stats_row["avgdl"] or 1.0,
+             "dl_sum": stats_row["dl_sum"] or 0, "delta": [], "delta_df": {}}
     value = (postings, term_df, stats)
     cat.cache_materialized(key, value)  # single, LRU-bounded insertion path
     return value
 
 
+def fold_text_index(compiler, label: str, prop: str, target: str = "nodes"):
+    """build_text_index with no pending delta: an index that absorbed
+    appends is rebuilt, so its postings and term_df hold every document."""
+    key = ("bm25", target, label, prop)
+    hit = compiler.cat._materialized.get(key)
+    if hit is not None and hit[2].get("delta"):
+        compiler.cat._unpersist_entry(compiler.cat._materialized.pop(key))
+    return build_text_index(compiler, label, prop, target)
+
+
+def bm25_append(entry, prop: str, rows: list) -> bool:
+    """Extend an in-memory BM25 index by appended node ``rows`` (dicts
+    holding _id and ``prop``): tokenize on the driver, add their postings
+    and per-term df to the delta and update N and dl_sum exactly. Spark's
+    avg of the integer dl column is the correctly rounded dl_sum / N, so
+    the stats equal a rebuild's bit for bit. False, with the entry
+    untouched, when it must be rebuilt instead: a disk-backed layout,
+    non-ASCII or non-string text, or a delta past BM25_DELTA_MAX."""
+    stats = entry[2]
+    if "buckets" in stats:
+        return False
+    docs = []
+    for row in rows:
+        text = row.get(prop)
+        if text is None:
+            continue
+        if not isinstance(text, str) or not text.isascii():
+            return False
+        toks = token_list(text)
+        if toks:  # a zero-token document has no dl row, like a rebuild
+            docs.append((row[_ID], toks))
+    new = [(t, i, tf, len(toks)) for i, toks in docs
+           for t, tf in Counter(toks).items()]
+    if len(stats["delta"]) + len(new) > BM25_DELTA_MAX:
+        return False
+    if not docs:
+        return True
+    delta_df = dict(stats["delta_df"])
+    for t, *_ in new:
+        delta_df[t] = delta_df.get(t, 0) + 1
+    n = stats["N"] + len(docs)
+    dl_sum = stats["dl_sum"] + sum(len(toks) for _, toks in docs)
+    stats.update(delta=stats["delta"] + new, delta_df=delta_df, N=n,
+                 dl_sum=dl_sum, avgdl=dl_sum / n)
+    return True
+
+
 def bm25_scores(compiler, label: str, prop: str, query_text: str,
                 target: str = "nodes") -> DataFrame:
     """(_id, _score) for documents matching any query term."""
-    import re
-
     postings, term_df, stats = build_text_index(compiler, label, prop, target)
-    terms = [t for t in re.split(TOKEN_SPLIT, query_text.lower()) if t]
+    terms = token_list(query_text)
     if not terms:
         return postings.select(_ID).limit(0).withColumn("_score", F.lit(0.0))
     n, avgdl = stats["N"], stats["avgdl"]
@@ -248,11 +301,27 @@ def bm25_scores(compiler, label: str, prop: str, query_text: str,
         bks = sorted({bucket_id(t, nb) for t in terms})
         postings = postings.filter(F.col("_bucket").isin(bks))
         term_df = term_df.filter(F.col("_bucket").isin(bks))
-    probe = postings.filter(F.col("term").isin(terms)).join(
-        F.broadcast(term_df.filter(F.col("term").isin(terms))
-                    .select("term", "df")), on="term")
-    idf = F.log((F.lit(float(n)) - F.col("df") + 0.5) / (F.col("df") + 0.5)
-                + F.lit(1.0))
+    probe = postings.filter(F.col("term").isin(terms))
+    qdf = F.broadcast(term_df.filter(F.col("term").isin(terms))
+                      .select("term", "df"))
+    qset = set(terms)
+    delta = [r for r in stats.get("delta", ()) if r[0] in qset]
+    df = F.col("df")
+    if delta:
+        # appended documents: their postings join as one literal relation,
+        # a term's df is the base df plus the appended documents holding it
+        # (left join: a term may be new to the base vocabulary)
+        delta_df = F.create_map(*[F.lit(x) for t, c in
+                                  stats["delta_df"].items() if t in qset
+                                  for x in (t, c)])
+        probe = (probe.unionByName(literal_rows(
+                     compiler.cat.spark, delta, _POSTINGS_SCHEMA))
+                 .join(qdf, on="term", how="left"))
+        df = (F.coalesce(df, F.lit(0))
+              + F.coalesce(delta_df[F.col("term")], F.lit(0)))
+    else:
+        probe = probe.join(qdf, on="term")
+    idf = F.log((F.lit(float(n)) - df + 0.5) / (df + 0.5) + F.lit(1.0))
     tf_part = (F.col("tf") * (BM25_K1 + 1)) / (
         F.col("tf") + BM25_K1 * (1 - BM25_B + BM25_B * F.col("dl") / F.lit(avgdl)))
     scored = probe.withColumn("_s", idf * tf_part)

@@ -2180,7 +2180,10 @@ def knn_graph_nndescent(df: DataFrame, id_col: str, vec_col: str,
         # and new x old pairs score, old x old skips (they co-occurred
         # in the previous round's list and were scored then). Join
         # order worst-then-vectors keys BOTH on _fdst: capped shuffles
-        # once, worst arrives partitioned from the state's groupBy, and
+        # once; worst is a _lead filter over the localCheckpointed
+        # state, whose _src hash partitioning survives only through the
+        # checkpoint's outputPartitioning and the alias-aware projection
+        # to _fdst (if either is lost, this join adds an exchange); and
         # the pre-partitioned pts cache joins with zero exchange. A
         # node missing from `worst` cannot occur (every id in a list
         # has a list), but coalesce keeps the -inf default shape.

@@ -23,7 +23,8 @@ from typing import Callable, Dict, List, Optional
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..catalog import GraphCatalog, RESERVED_COLS, _DST, _ID, _SRC
+from ..catalog import (GraphCatalog, RESERVED_COLS, _DST, _ID, _SRC,
+                       literal_rows)
 from . import ast
 from .exprs import ExprCompiler, dotted_path, lit_value
 
@@ -386,11 +387,13 @@ class StepCompiler:
         raise UnsupportedStep(f"hop {op}")
 
     def _empty_nodes(self) -> DataFrame:
-        return self.cat.spark.createDataFrame([], f"{_ID} long, {_LABEL} string")
+        return literal_rows(self.cat.spark, [],
+                            f"{_ID} long, {_LABEL} string")
 
     def _empty_edges(self) -> DataFrame:
-        return self.cat.spark.createDataFrame(
-            [], f"{_ID} long, {_SRC} long, {_DST} long, {_LABEL} string")
+        return literal_rows(
+            self.cat.spark, [],
+            f"{_ID} long, {_SRC} long, {_DST} long, {_LABEL} string")
 
     # -- stream ops -------------------------------------------------------------
 
@@ -836,11 +839,17 @@ class StepCompiler:
         (nid,) = self.cat.allocate_ids(1)
         row = dict(props)
         row[_ID] = nid
-        df = self.cat.spark.createDataFrame([row])
-        self.cat.add_nodes(step.label, df)
+        df = literal_rows(self.cat.spark, [row])
+        self.cat.add_nodes(step.label, df, rows=[row])
         # the new node becomes the current stream (dsl.rs:3119)
-        fresh = self.cat.nodes(step.label)[step.label].filter(F.col(_ID) == nid)
-        return Stream("node", {step.label: fresh})
+        return Stream("node", {step.label: self._written(
+            self.cat.nodes(step.label)[step.label], df)})
+
+    @staticmethod
+    def _written(table: DataFrame, df: DataFrame) -> DataFrame:
+        """The written rows ``df`` in the shape of the table they joined:
+        its columns and types, without scanning it."""
+        return table.limit(0).unionByName(df, allowMissingColumns=True)
 
     # Write batches are OLTP-small by contract (the reference's write path
     # enumerates endpoints the same way, dsl.rs:3128-3138). A large frontier
@@ -881,11 +890,10 @@ class StepCompiler:
                 for e, (s, d) in zip(eids, pairs)]
         if not rows:
             return Stream("edge", {step.label: self._empty_edges()})
-        df = self.cat.spark.createDataFrame(rows)
+        df = literal_rows(self.cat.spark, rows)
         self.cat.add_edges(step.label, df)
-        fresh = self.cat.edges(step.label)[step.label].filter(
-            F.col(_ID).isin(eids))
-        return Stream("edge", {step.label: fresh})
+        return Stream("edge", {step.label: self._written(
+            self.cat.edges(step.label)[step.label], df)})
 
     def _apply_to_catalog(self, stream: Stream, update_fn) -> Stream:
         """Copy-on-write update of catalog tables for the stream's elements."""

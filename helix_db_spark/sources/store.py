@@ -97,7 +97,7 @@ def store_index(compiler, root: str,
     probes to these automatically (operators/search.bm25_scores prunes by
     term bucket; operators/similarity.lsh_topk by band-key bucket).
     """
-    from ..operators.search import build_text_index
+    from ..operators.search import fold_text_index
     from ..operators.similarity import build_lsh_index
 
     cat = compiler.cat
@@ -106,7 +106,9 @@ def store_index(compiler, root: str,
         target = "nodes" if entry.kind.startswith("node") else "edges"
         name = f"{target}__{entry.label}__{entry.property}"
         if entry.kind.endswith("_text"):
-            postings, term_df, stats = build_text_index(
+            # an index that absorbed appends is rebuilt first: its base
+            # postings and term_df lack the appended documents
+            postings, term_df, stats = fold_text_index(
                 compiler, entry.label, entry.property, target)
             d = os.path.join(root, "index", "bm25", name)
             (postings.withColumn("_bucket", bucket_col(F.col("term"), buckets))

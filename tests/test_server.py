@@ -207,6 +207,41 @@ def test_warm_detects_search_inside_subtraversal_and_foreach(spark):
     assert status == 200
 
 
+def test_warm_bm25_after_add_n(spark):
+    """An AddN of a text document extends the in-memory BM25 index in
+    place, so a warm-only BM25 request right after the durable write still
+    finds the index warm (and sees the new document)."""
+    from helix_db_spark.operators.search import build_text_index
+    from helix_db_spark.plans.compiler import ExecContext, StepCompiler
+
+    cat = GraphCatalog(spark)
+    cat.add_nodes("Doc", spark.createDataFrame(
+        [(1, "spark join"), (2, "window merge")], "k long, text string"),
+        key_col="k")
+    build_text_index(StepCompiler(ExecContext(cat)), "Doc", "text")
+    srv = HelixSparkServer(HelixSparkEngine(cat))
+
+    def request(mode, *steps):
+        return {"request_type": mode, "query": {"queries": [{"Query": {
+            "name": "r", "steps": list(steps), "condition": None}}],
+            "returns": ["r"]}}
+
+    add = request("write", {"AddN": {"label": "Doc", "properties": [
+        ["k", {"Value": {"I64": 3}}],
+        ["text", {"Value": {"String": "quokka spark"}}]]}})
+    status, _ = srv.handle("/v1/query", add,
+                           headers={"x-helix-await-durable": "true"})
+    assert status == 200
+    bm25 = request("read", {"TextSearchNodes": {
+        "label": "Doc", "property": "text",
+        "query_text": {"Value": {"String": "quokka"}}, "k": 5}},
+        {"Project": [{"alias": "k", "source": "k"}]})
+    status, out = srv.handle("/v1/query", bm25,
+                             headers={"x-helix-warm": "true"})
+    assert status == 200, out
+    assert [r["k"] for r in out["r"]] == [3]
+
+
 def test_warm_probe_ivf_method(spark):
     """method='ivf' warm probe: cold until an IVF build for the property
     exists in the plan-keyed cache (it never lives in cat._materialized),

@@ -192,6 +192,48 @@ def test_store_index_bucketed_probes(spark, tmp_path):
     spark.conf.unset("spark.sql.maxMetadataStringLength")
 
 
+def test_store_index_after_appends_matches_fresh_build(spark, tmp_path):
+    """store_index on a BM25 index that absorbed AddN appends writes a
+    full build's postings and stats: the reloaded catalog's disk probe
+    answers like a fresh in-memory build over the same rows."""
+    from helix_db_spark.catalog import _ID
+    from helix_db_spark.operators.search import build_text_index, text_search
+    from helix_db_spark.plans import ast
+    from helix_db_spark.plans.compiler import ExecContext, StepCompiler
+    from helix_db_spark.sources.store import store_index
+
+    key = ("bm25", "nodes", "documents", "text")
+    cat = load_graph(spark, SF_DIR)
+    cat.create_index(IndexEntry("node_text", "documents", "text"))
+    build_text_index(StepCompiler(ExecContext(cat)), "documents", "text")
+    eng = HelixSparkEngine(cat)
+    for i, text in enumerate(("quokka spark spark", "zyzzyva join quokka")):
+        eng.execute_batch(dsl.write_batch().var_as("d", g().add_n(
+            "documents", doc_id=990000 + i, text=text)).returning("d"))
+    assert cat._materialized[key][2]["delta"]
+    root = str(tmp_path / "store")
+    save_catalog(cat, root, partitions=2)
+    store_index(StepCompiler(ExecContext(cat)), root)
+
+    def probe(c):
+        step = ast.TextSearch("nodes", "documents", "text",
+                              "quokka spark", 5, None)
+        hits = text_search(StepCompiler(ExecContext(c)), step)
+        return [(r[_ID], r["_distance"]) for r in hits.frames["documents"]
+                .select(_ID, "_distance").collect()]
+
+    disk = load_catalog(spark, root)
+    assert "buckets" in disk._materialized[key][2]
+    fresh = load_catalog(spark, root)
+    fresh._materialized.pop(key)  # build in memory from the stored rows
+    got, want = probe(disk), probe(fresh)
+    assert [i for i, _ in got] == [i for i, _ in want]
+    assert [d for _, d in got] == pytest.approx([d for _, d in want],
+                                                rel=1e-12)
+    assert (disk._materialized[key][2]["N"]
+            == fresh._materialized[key][2]["N"])
+
+
 def test_store_ivf_layout_serves_engine_probe(spark, tmp_path):
     """method='ivf' on a RELOADED catalog scans the on-disk
     cell-partitioned layout (ivf_disk registration) with a _cell
