@@ -29,6 +29,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .cache import FrameCache
+
 ID_SHIFT = 44  # 2^44 rows per label; 2^19 labels
 _ID = "_id"
 _SRC = "_src"
@@ -121,8 +123,10 @@ class GraphCatalog:
         # populated by operators/search.py + similarity.py. A write to the
         # label drops its entries so post-write searches never see stale
         # hits, except that an in-memory node BM25 index absorbs a literal
-        # AddN append (search.bm25_append) and stays
-        self._materialized: Dict[tuple, object] = {}
+        # AddN append (search.bm25_append) and stays. Bounded: a served
+        # engine holds one entry per (kind, target, label, prop) it has
+        # searched, and an evicted index rebuilds on next use.
+        self._materialized = FrameCache(32)
         # labels mutated since the last durability checkpoint — the
         # x-helix-await-durable analogue (server.py): an awaiting write
         # eagerly checkpoints exactly these before responding
@@ -228,7 +232,8 @@ class GraphCatalog:
             self._nodes[label] = df
         absorbed = self._absorb_append(label, rows) if rows else {}
         self.invalidate_label(label)
-        self._materialized.update(absorbed)
+        for key, entry in absorbed.items():
+            self._materialized.put(key, entry)
         self._dirty.add(("node", label))
         # the active config's secondary_indices apply to labels
         # registered AFTER configure() too (the reference maintains its
@@ -426,22 +431,10 @@ class GraphCatalog:
 
     # -- search-index cache invalidation ------------------------------------
 
-    @staticmethod
-    def _unpersist_entry(entry) -> None:
-        frames = entry if isinstance(entry, tuple) else (entry,)
-        for f in frames:
-            if isinstance(f, DataFrame):
-                try:
-                    f.unpersist()
-                except Exception:
-                    pass
-
     def _absorb_append(self, label: str, rows: list) -> dict:
         """Extend the node BM25 indexes of ``label`` by appended ``rows``;
         returns {key: entry} of those that absorbed them, taken out of the
-        cache so invalidate_label leaves them alone. Entries are updated
-        in place (never via cache_materialized, whose supersede path would
-        unpersist the shared base frames)."""
+        cache (still persisted) so invalidate_label leaves them alone."""
         from .operators.search import bm25_append
 
         out = {}
@@ -460,25 +453,7 @@ class GraphCatalog:
         for key in list(self._materialized):
             if label is not None and len(key) > 2 and key[2] != label:
                 continue
-            self._unpersist_entry(self._materialized.pop(key))
-
-    # A long-lived served engine accumulates one materialized index per
-    # (kind, target, label, prop) it has ever searched; the LRU bound keeps
-    # the storage-memory footprint finite (evicted indexes unpersist and
-    # rebuild on next use — same contract as a clearCache eviction).
-    MATERIALIZED_MAX = 32
-
-    def cache_materialized(self, key: tuple, value) -> None:
-        """Insert into the search-index cache, evicting (and unpersisting)
-        least-recently-inserted entries beyond MATERIALIZED_MAX. Superseded
-        same-key entries are unpersisted, never silently dropped."""
-        old = self._materialized.pop(key, None)
-        if old is not None and old is not value:
-            self._unpersist_entry(old)
-        self._materialized[key] = value
-        while len(self._materialized) > self.MATERIALIZED_MAX:
-            oldest = next(iter(self._materialized))
-            self._unpersist_entry(self._materialized.pop(oldest))
+            self._materialized.drop(key)
 
     # -- index DDL ----------------------------------------------------------
 

@@ -28,10 +28,12 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..cache import hold
 from ..functions.io import atomic_write_json
 from ..functions.text import char_shingles, md5_long, md5_long32, \
     shingle_rows, shingles_from_tokens, token_shingles, tokenized_docs, \
     tokens
+from .sampling import md5_unit
 
 # fixed universal-hash prime: with 32-bit inputs and 31-bit multipliers,
 # a*h + b < 2^63 — no long overflow under ANSI mode, and the exact same
@@ -53,49 +55,14 @@ class DedupFloodError(RuntimeError):
     mitigation knob instead — pre-flight cost is one narrow aggregate,
     the same shape as the miner's own first shuffle."""
 
-# Materialization strategy for multi-consumer intermediates (signatures,
-# shingle sets, prefix tables). A/B-able via HELIX_DEDUP_MAT for bench
-# reconciliation (r5 driver-harness numbers in PLANS.md):
-#   eager_persist — persist + count() [DEFAULT, won the A/B]: Dataset cache
-#                  keeps size stats, so the small sigs/sets/prefix
-#                  join-backs stay broadcast-eligible, and the eager count
-#                  stops the two join sides racing to populate the cache.
-#                  dedup_ngram 1.68s / minhash 2.00s under `python bench.py`.
-#   checkpoint   — eager localCheckpoint (the r4 default): blocks live
-#                  outside the CacheManager (clearCache-immune, freed on
-#                  DataFrame GC) but the plan becomes a stats-less
-#                  LogicalRDD — join-backs fall from broadcast to
-#                  sort-merge, and rows cache deserialized. Cost measured
-#                  by the driver: dedup_ngram 3.56s / minhash 2.29s
-#                  (BENCH_r04) vs persist's 1.88/2.06 (BENCH_r03).
-#   persist      — lazy persist (r3 behavior), kept for A/B.
-# Served-engine leak control (ADVICE r3): persisted intermediates are
-# tracked in a bounded FIFO; beyond _MAT_LRU_MAX the oldest is unpersisted.
-# persist (unlike localCheckpoint) KEEPS lineage, so an early eviction can
-# only cost recompute, never correctness — and on a real cluster a lost
-# executor recomputes instead of failing the job (ADVICE r4's
-# localCheckpoint lineage-truncation concern).
-import os as _os
-from collections import deque as _deque
-
-_MAT_LRU: "_deque[DataFrame]" = _deque()
-_MAT_LRU_MAX = 8
-
 
 def _mat(df: DataFrame) -> DataFrame:
-    """Materialize an intermediate consumed by several downstream branches."""
-    mode = _os.environ.get("HELIX_DEDUP_MAT", "eager_persist")
-    if mode == "checkpoint":
-        return df.localCheckpoint()
-    if mode == "lazy_checkpoint":
-        return df.localCheckpoint(eager=False)
+    """Materialize an intermediate consumed by several downstream branches
+    (signatures, shingle sets, prefix tables). The eager count() keeps
+    the Dataset cache's size stats, so join-backs stay broadcast-eligible."""
     out = df.persist()
-    if mode == "eager_persist":
-        out.count()
-        _MAT_LRU.append(out)
-        while len(_MAT_LRU) > _MAT_LRU_MAX:
-            _MAT_LRU.popleft().unpersist()
-    return out
+    out.count()
+    return hold(out)
 
 
 def _mat_lazy(df: DataFrame) -> DataFrame:
@@ -104,13 +71,8 @@ def _mat_lazy(df: DataFrame) -> DataFrame:
     self-join): the cache still stops the second consumer recomputing
     the subtree, but the population folds into the FIRST job instead of
     costing a separate eager count() pass. Interleaved A/B r9 (ngram
-    prefix table): lazy 2.39s vs eager 3.59s vs none 2.63s at sf0.1.
-    Same LRU leak control as _mat."""
-    out = df.persist()
-    _MAT_LRU.append(out)
-    while len(_MAT_LRU) > _MAT_LRU_MAX:
-        _MAT_LRU.popleft().unpersist()
-    return out
+    prefix table): lazy 2.39s vs eager 3.59s vs none 2.63s at sf0.1."""
+    return hold(df.persist())
 
 
 def _perm_constants(num: int):
@@ -1369,11 +1331,7 @@ def dedup_quality_report(df: DataFrame, id_col: str, text_col: str,
     if sample_fraction is not None:
         if not (0.0 < sample_fraction <= 1.0):
             raise ValueError("sample_fraction must be in (0, 1]")
-        bucket = (F.conv(F.substring(
-            F.md5(F.concat(F.lit(seed), F.lit("_"),
-                           F.col(id_col).cast("string"))),
-            1, 8), 16, 10).cast("long") % 1_000_000) / 1_000_000.0
-        df = df.filter(bucket < float(sample_fraction))
+        df = df.filter(md5_unit(seed, id_col) < float(sample_fraction))
     # the audit's flood bound is the SAMPLE, not the guard (r13, with
     # the library-default flip): its miners run on an already-bounded
     # md5-bucket sample, and a flood in the sample is exactly the

@@ -18,6 +18,8 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..cache import hold
+
 
 def curate_corpus(docs: DataFrame, bench: Optional[DataFrame] = None,
                   id_col: str = "doc_id", text_col: str = "text",
@@ -150,12 +152,12 @@ def cluster_topics(docs: DataFrame, id_col: str, text_col: str,
     # join-back) and sizes/keyed re-read assigned — unpersisted, the
     # tokenize+hash pipeline re-executes per consumer (~5x the wall at
     # sf1; ivf_assign's eager count() materializes the cache up front)
-    emb = with_hash_embedding(
+    emb = hold(with_hash_embedding(
         docs.select(F.col(id_col), F.col(text_col)), text_col, "_e",
-        dim).persist()
+        dim).persist())
     assigned, _ = ivf_assign(emb, id_col, "_e", max_cells,
                              kernel=True)
-    assigned = assigned.persist()
+    assigned = hold(assigned.persist())
     sizes = assigned.groupBy("_cell").agg(
         F.count(F.lit(1)).alias("n_docs"))
     keyed = assigned.select(

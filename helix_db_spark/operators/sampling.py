@@ -10,10 +10,19 @@ from __future__ import annotations
 
 from typing import Optional, Sequence, Tuple
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.text import tokens
+from ..functions.text import md5_long32, tokens
+
+
+def md5_unit(seed: str, id_col: str) -> Column:
+    """Deterministic draw u in [0, 1): the md5 bucket of ``seed || "_" ||
+    id`` mod 10^6, scaled — engine- and partitioning-independent, and
+    DuckDB-reproducible through md5_long32's mapping."""
+    return (md5_long32(F.concat(F.lit(seed), F.lit("_"),
+                                F.col(id_col).cast("string")))
+            % 1_000_000) / 1_000_000.0
 
 
 def split_assign(df: DataFrame, id_col: str,
@@ -31,9 +40,7 @@ def split_assign(df: DataFrame, id_col: str,
     if len(weights) != len(names):
         raise ValueError("weights and names must align")
     total = float(sum(weights))
-    bucket = (F.conv(F.substring(
-        F.md5(F.concat(F.lit(seed), F.lit("_"), F.col(id_col).cast("string"))),
-        1, 8), 16, 10).cast("long") % 1_000_000) / 1_000_000.0
+    bucket = md5_unit(seed, id_col)
     expr = F.lit(names[-1])
     acc = 0.0
     arms = []
@@ -60,10 +67,7 @@ def stratified_sample(df: DataFrame, id_col: str, strata_col: str,
     reproducible dataset cards. One narrow projection, no shuffle; at
     100 TB this rides the corpus scan for free.
     """
-    bucket = (F.conv(F.substring(
-        F.md5(F.concat(F.lit(seed), F.lit("_"),
-                       F.col(id_col).cast("string"))),
-        1, 8), 16, 10).cast("long") % 1_000_000) / 1_000_000.0
+    bucket = md5_unit(seed, id_col)
     frac = F.lit(float(default))
     for value, f in sorted(fractions.items()):
         frac = F.when(F.col(strata_col) == value,
@@ -249,10 +253,7 @@ def weighted_sample(df: DataFrame, id_col: str, weight_col: str,
     anywhere. One narrow projection, no shuffle — rides the corpus scan
     for free at any scale.
     """
-    bucket = (F.conv(F.substring(
-        F.md5(F.concat(F.lit(seed), F.lit("_"),
-                       F.col(id_col).cast("string"))),
-        1, 8), 16, 10).cast("long") % 1_000_000) / 1_000_000.0
+    bucket = md5_unit(seed, id_col)
     p = F.least(F.col(weight_col) * F.lit(float(scale)), F.lit(1.0))
     return df.filter(bucket < p)
 

@@ -25,7 +25,9 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, FloatType, LongType
 
+from ..cache import FrameCache, hold
 from ..catalog import _ID
+from ..functions.text import md5_long32
 from ..functions.vector import cosine_distance, cosine_similarity_cols, norm
 
 _LOG = logging.getLogger(__name__)
@@ -108,9 +110,7 @@ def build_lsh_index(compiler, target: str, label: str, prop: str,
     aug = (df.withColumn("__bands", signature_udf(dim)(F.col(prop)))
              .withColumn("__vnorm", norm(F.col(prop)))
              .persist())
-    # single insertion path: the catalog's LRU-bounded cache (r5 — the
-    # dict-fallback shim predated cache_materialized and bypassed the bound)
-    cat.cache_materialized(key, aug)
+    cat._materialized.put(key, aug)
     return aug
 
 
@@ -340,49 +340,34 @@ def _assign_pandas(df: DataFrame, id_col: str, vec_col: str,
     return src.mapInPandas(assign, f"{id_col} {id_t}, _cell {cid_t}")
 
 
-# LRU-bounded index cache: a long-lived served engine rebuilds indexes as
-# data changes (new semanticHash => new key); without a bound every stale
-# build stays persisted forever (ADVICE r3). 8 live indexes is plenty for a
-# single engine; evicted entries are unpersisted immediately.
-_IVF_CACHE: "dict" = {}
-_IVF_CACHE_MAX = 8
+# Plan-keyed IVF builds (ivf_key): a long-lived served engine rebuilds as
+# data changes (new semanticHash => new key), so the bound keeps stale
+# builds from staying persisted forever. Each entry is (assigned, cents,
+# memo); memo holds the build's (n_rows, ncells).
+_IVF_CACHE = FrameCache(8)
 
 
-def _ivf_cache_put(key, value) -> None:
-    _IVF_CACHE[key] = value
-    while len(_IVF_CACHE) > _IVF_CACHE_MAX:
-        old_key = next(iter(_IVF_CACHE))
-        assigned, cents = _IVF_CACHE.pop(old_key)
-        _IVF_STATS.pop(old_key, None)
-        for frame in (assigned, cents):
-            try:
-                frame.unpersist()
-            except Exception:
-                pass
-
-
-# (n_rows, ncells) per built index — probe planning (the ef_search ->
-# nprobe mapping) is a pure function of these, so a served engine
-# computes them ONCE per build instead of two Spark jobs per request
-# (r6 review); evicted alongside the index itself.
-_IVF_STATS: "dict" = {}
+def ivf_key(df: DataFrame, id_col: str, vec_col: str,
+            max_cells: int = IVF_MAX_CELLS, refine_iters: int = 0) -> tuple:
+    """The _IVF_CACHE key of ivf_index's build over ``df``."""
+    return (df._jdf.queryExecution().analyzed().semanticHash(),
+            id_col, vec_col, max_cells, refine_iters)
 
 
 def ivf_index_stats(df: DataFrame, id_col: str, vec_col: str,
                     max_cells: int = IVF_MAX_CELLS,
                     refine_iters: int = 0) -> tuple:
-    """(n_rows, ncells) of the (cached) IVF build — memoized under the
-    same key as the index, mirroring how the on-disk layout reads them
-    from meta.json."""
-    key = (df._jdf.queryExecution().analyzed().semanticHash(),
-           id_col, vec_col, max_cells, refine_iters)
-    st = _IVF_STATS.get(key)
-    if st is None:
-        assigned, cents = ivf_index(df, id_col, vec_col, max_cells,
-                                    refine_iters=refine_iters)
-        st = (assigned.count(), cents.count())
-        _IVF_STATS[key] = st
-    return st
+    """(n_rows, ncells) of the (cached) IVF build — probe planning (the
+    ef_search -> nprobe mapping) is a pure function of these, so they are
+    counted once per build, not per request, mirroring how the on-disk
+    layout reads them from meta.json."""
+    key = ivf_key(df, id_col, vec_col, max_cells, refine_iters)
+    if key not in _IVF_CACHE:
+        ivf_index(df, id_col, vec_col, max_cells, refine_iters=refine_iters)
+    assigned, cents, memo = _IVF_CACHE[key]
+    if "stats" not in memo:
+        memo["stats"] = (assigned.count(), cents.count())
+    return memo["stats"]
 
 
 def ivf_index(df: DataFrame, id_col: str, vec_col: str,
@@ -395,18 +380,10 @@ def ivf_index(df: DataFrame, id_col: str, vec_col: str,
     the distributed Lloyd refinement at build (the ef_construction
     mapping, config.py) — part of the cache key, since refined and seed
     assignments differ."""
-    key = (df._jdf.queryExecution().analyzed().semanticHash(),
-           id_col, vec_col, max_cells, refine_iters)
+    key = ivf_key(df, id_col, vec_col, max_cells, refine_iters)
     hit = _IVF_CACHE.get(key)
     if hit is not None:
-        assigned, cents = hit
-        if not assigned.storageLevel.useMemory:  # evicted by clearCache
-            assigned.persist()
-            cents.persist()
-        # refresh LRU recency
-        _IVF_CACHE.pop(key)
-        _IVF_CACHE[key] = (assigned, cents)
-        return assigned, cents
+        return hit[:2]
     if refine_iters > 0:
         assigned, cents = kmeans_refine(df, id_col, vec_col,
                                         iters=refine_iters,
@@ -418,7 +395,7 @@ def ivf_index(df: DataFrame, id_col: str, vec_col: str,
     # index metadata, cached alongside the assignment)
     assigned = assigned.persist()
     cents = cents.persist()
-    _ivf_cache_put(key, (assigned, cents))
+    _IVF_CACHE.put(key, (assigned, cents, {}))
     return assigned, cents
 
 
@@ -688,7 +665,7 @@ def semantic_dedup(df: DataFrame, id_col: str, vec_col: str,
     # three consumers (pair-join left, pair-join right, the anti-join
     # back) — unpersisted, the assignment kernel re-runs per consumer
     # (the cluster_topics r10 lesson)
-    assigned = assigned.persist()
+    assigned = hold(assigned.persist())
     if max_cell_rows is not None:
         # split rounds read the persisted seed once, then iterate on
         # localCheckpointed state; the returned frame is checkpointed,
@@ -1502,7 +1479,7 @@ def knn_graph(df: DataFrame, id_col: str, vec_col: str,
         # the pair join reads assigned on BOTH sides (and the nprobe>1
         # path re-probes the query side) — persist so the assignment
         # kernel runs once (the cluster_topics r10 lesson)
-        assigned = assigned.persist()
+        assigned = hold(assigned.persist())
         if nprobe > 1:
             # query side probes its nprobe nearest cells; the corpus
             # side stays in its home cell, so each true neighbor is
@@ -2066,9 +2043,8 @@ def knn_graph_nndescent(df: DataFrame, id_col: str, vec_col: str,
     pos = (base.withColumn("_r1", F.row_number().over(wb))
            .join(F.broadcast(offs), on="_pb")
            .select("_id", (F.col("_off") + F.col("_r1") - 1).alias("_p")))
-    tp = [(F.conv(F.substring(
-        F.md5(F.concat(F.col("_id").cast("string"), F.lit(f"_{o}"))),
-        1, 8), 16, 10).cast("long") % n) for o in range(1, r_rand + 1)]
+    tp = [md5_long32(F.concat(F.col("_id").cast("string"), F.lit(f"_{o}")))
+          % n for o in range(1, r_rand + 1)]
     tgt = pos.select(F.col("_id").alias("_src"),
                      F.explode(F.array(*tp)).alias("_tp"))
     bridges = (tgt.join(pos.select(F.col("_p").alias("_tp"),

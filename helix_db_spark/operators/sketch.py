@@ -48,24 +48,10 @@ from typing import List, Optional, Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..cache import hold
+from ..functions.text import md5_long as h60  # the md5-prefix 60-bit hash
+
 M60 = 1 << 60          # md5 15-hex-digit prefix space
-
-# Bounded ownership for the filtered path's lazily-persisted distinct
-# frames: without it every kmv_distinct(strategy="filtered") call leaks
-# one InMemoryRelation into the session cache for the session lifetime
-# (same pattern as operators/dedup._MAT_LRU).
-from collections import deque as _deque
-
-_PERSIST_LRU: "_deque" = _deque()
-_PERSIST_LRU_MAX = 4
-
-
-def h60(col: Column) -> Column:
-    """Uniform deterministic 60-bit hash of a value (md5 prefix), the
-    same construction as operators/sampling.py's split buckets and the
-    oracle's ``CAST(('0x' || substr(md5(x),1,15)) AS BIGINT)``."""
-    return F.conv(F.substring(F.md5(col.cast("string")), 1, 15),
-                  16, 10).cast("bigint")
 
 
 def _bottom_k(d: DataFrame, group_cols: Sequence[str], k: int,
@@ -168,10 +154,7 @@ def kmv_distinct(df: DataFrame, group_cols: Sequence[str], value_col: str,
         # scans). The persist is LAZY (no action at construction); the
         # HLL runs over the distinct hashes, which has exactly the
         # cardinality the threshold needs.
-        d = d.persist()
-        _PERSIST_LRU.append(d)
-        while len(_PERSIST_LRU) > _PERSIST_LRU_MAX:
-            _PERSIST_LRU.popleft().unpersist()
+        d = hold(d.persist())
         acd = (d.groupBy(*groups)
                 .agg(F.approx_count_distinct("_h", 0.05).alias("_acd")))
         budget = float(headroom * k)

@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import tokens
+from ..functions.text import md5_long32, tokens
 
 # Tiny built-in stopword profiles for the n-gram/stopword-ratio language
 # heuristic. Deliberately small + documented: language ID here is a cheap
@@ -468,8 +468,7 @@ def hash_embedding(text: Column, dim: int = 64) -> Column:
     component SQL-reproducible for the oracle.
     """
     toks = tokens(text)
-    h = F.transform(toks, lambda t: F.conv(
-        F.substring(F.md5(t), 1, 8), 16, 10).cast("long"))
+    h = F.transform(toks, md5_long32)
     return F.when(text.isNotNull(), _he_from_hashes(h, dim))
 
 
@@ -501,8 +500,7 @@ def with_hash_embedding(df: DataFrame, text_col: str, out_col: str,
     once per row and the components reference the attribute. Values
     identical (same expressions over the same hashes)."""
     toks = tokens(F.col(text_col))
-    hexpr = F.transform(toks, lambda t: F.conv(
-        F.substring(F.md5(t), 1, 8), 16, 10).cast("long"))
+    hexpr = F.transform(toks, md5_long32)
     b = df.withColumn("_he_h", F.explode(F.array(hexpr)))
     out = F.when(F.col(text_col).isNotNull(),
                  _he_from_hashes(F.col("_he_h"), dim))

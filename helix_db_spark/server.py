@@ -151,54 +151,40 @@ class HelixSparkServer:
             yield from HelixSparkServer._walk_entries(entry.foreach_body)
 
     def _cold_reason(self, request: dict) -> Optional[str]:
-        """None if every search step's index is materialized in memory,
-        else a description of the first cold index."""
-        from pyspark.sql import DataFrame
+        """None if every search step's index is warm in the cache its
+        probe reads, else a description of the first cold index. A
+        registered disk layout (lsh_disk/ivf_disk) is probed first and
+        builds nothing; disk-backed BM25 shares the in-memory key."""
+        from .catalog import _ID
+        from .operators.search import ivf_source
+        from .operators.similarity import _IVF_CACHE, ivf_key
 
         batch = parse_request(request)
-        cat = self.engine.catalog
-        # materialized-index kinds actually written by the build paths:
-        # search.build_vector_index -> "vecnorm", similarity.build_lsh_index
-        # -> "lsh", search.build_text_index -> "bm25". (IVF lives in
-        # similarity._IVF_CACHE keyed by source plan, not the catalog — a
-        # probe for a dead "ivf" kind here could never hit.)
+        mat = self.engine.catalog._materialized
         for entry in self._walk_entries(batch.entries):
             for step in self._walk_steps(entry.traversal.steps):
                 name = type(step).__name__
-                if name == "VectorSearch":
-                    # the kind the step will actually probe (ADVICE r4: an
-                    # either-kind check let a method='lsh' request pass the
-                    # warm probe on the exact-search index, then pay a cold
-                    # LSH build inside a supposedly-warm request)
-                    if step.method == "ivf":
-                        # IVF caches by source plan hash (similarity.
-                        # _IVF_CACHE), not the catalog: warm iff any cached
-                        # build targets this property, or an on-disk
-                        # layout is registered (ivf_disk -> no build cost)
-                        from .operators.similarity import _IVF_CACHE
-                        on_disk = cat._materialized.get(
-                            ("ivf_disk", step.target, step.label,
-                             step.property)) is not None
-                        if not on_disk and not any(
-                                key[2] == step.property
-                                for key in _IVF_CACHE):
-                            return (f"index for ({step.label}, "
-                                    f"{step.property}) is cold (ivf)")
-                        continue
-                    kind = "lsh" if step.method == "lsh" else "vecnorm"
-                elif name == "TextSearch":
+                if name == "TextSearch":
                     kind = "bm25"
+                elif name == "VectorSearch":
+                    # the kind the step will actually probe (ADVICE r4)
+                    kind = {"lsh": "lsh", "ivf": "ivf"}.get(step.method,
+                                                           "vecnorm")
                 else:
                     continue
-                hit = cat._materialized.get(
-                    (kind, step.target, step.label, step.property))
-                frames = hit if isinstance(hit, tuple) else (hit,)
-                warm = hit is not None and all(
-                    f.storageLevel.useMemory for f in frames
-                    if isinstance(f, DataFrame))
+                at = (step.target, step.label, step.property)
+                disk = (kind + "_disk",) + at
+                if disk in mat:
+                    warm = mat.warm(disk)
+                elif kind == "ivf":
+                    base, iters = ivf_source(self.engine.catalog, *at)
+                    warm = _IVF_CACHE.warm(ivf_key(
+                        base, _ID, step.property, refine_iters=iters))
+                else:
+                    warm = mat.warm((kind,) + at)
                 if not warm:
                     return (f"index for ({step.label}, {step.property}) "
-                            "is not materialized")
+                            f"is not materialized ({kind})")
         return None
 
     # -- HTTP lifecycle -----------------------------------------------------

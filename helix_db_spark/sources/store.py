@@ -176,15 +176,15 @@ def _load_disk_indexes(spark: SparkSession, cat: GraphCatalog,
                           "buckets": meta["buckets"]})
             else:
                 value = (spark.read.parquet(os.path.join(d, parts)), meta)
-            cat.cache_materialized((key_kind, target, label, prop), value)
+            cat._materialized.put((key_kind, target, label, prop), value)
     ivf_base = os.path.join(root, "index", "ivf")
     if os.path.isdir(ivf_base):
         for name in sorted(os.listdir(ivf_base)):
             target, label, prop = name.split("__", 2)
             # value is the index ROOT PATH: the probe (similarity.
             # ivf_topk_disk) plans against centroids/meta itself
-            cat.cache_materialized(("ivf_disk", target, label, prop),
-                                   os.path.join(ivf_base, name))
+            cat._materialized.put(("ivf_disk", target, label, prop),
+                                  os.path.join(ivf_base, name))
 
 
 def load_catalog(spark: SparkSession, root: str) -> GraphCatalog:

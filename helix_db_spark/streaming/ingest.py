@@ -228,7 +228,7 @@ def gram_hashes_col(text_col: str, n: int = 8):
     """Array of md5-derived 60-bit hashes of the token n-grams of a text
     column — all built-in (tokenize once into an array, slice per gram).
     Usable on streaming frames (no window functions, no explode)."""
-    from ..functions.text import TOKEN_SPLIT
+    from ..functions.text import TOKEN_SPLIT, md5_long
 
     toks = F.filter(F.split(F.lower(F.col(text_col)), TOKEN_SPLIT),
                     lambda t: t != "")
@@ -238,9 +238,7 @@ def gram_hashes_col(text_col: str, n: int = 8):
     grams = F.transform(
         F.sequence(F.lit(1), F.greatest(F.size(toks) - F.lit(n - 1),
                                         F.lit(0))),
-        lambda i: F.conv(F.substring(
-            F.md5(F.concat_ws(" ", F.slice(toks, i, n))), 1, 15), 16, 10)
-        .cast("long"))
+        lambda i: md5_long(F.concat_ws(" ", F.slice(toks, i, n))))
     return F.when(F.size(toks) >= n, grams) \
         .otherwise(F.array().cast("array<long>"))
 

@@ -52,7 +52,7 @@ def _topk(cat, query, k=10):
 
 def _rebuilt(cat):
     """Answers and stats of the same catalog after a from-scratch build."""
-    cat._unpersist_entry(cat._materialized.pop(KEY))
+    cat._materialized.drop(KEY)
     stats = search.build_text_index(StepCompiler(ExecContext(cat)),
                                     "documents", "text")[2]
     return {q: _topk(cat, q) for q in QUERIES}, stats

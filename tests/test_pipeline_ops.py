@@ -951,19 +951,19 @@ def test_ivf_cache_lru_bounded(spark):
     from helix_db_spark.operators import similarity as S
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    S._IVF_CACHE.clear()
     frames = []
-    for i in range(S._IVF_CACHE_MAX + 3):
+    for i in range(S._IVF_CACHE.bound + 3):
         # distinct logical plans => distinct cache keys
         df = emb.filter(F.col("vec_id") >= i).localCheckpoint()
         frames.append(S.ivf_index(df, "vec_id", "embedding"))
-    assert len(S._IVF_CACHE) == S._IVF_CACHE_MAX
+    assert len(S._IVF_CACHE) == S._IVF_CACHE.bound
     # evicted entries are unpersisted; survivors stay persisted
     evicted_assigned = frames[0][0]
     assert not evicted_assigned.storageLevel.useMemory
     live_assigned = frames[-1][0]
     assert live_assigned.storageLevel.useMemory
-    S._IVF_CACHE.clear()
+    for key in S._IVF_CACHE:
+        S._IVF_CACHE.drop(key)
 
 
 def test_cosine_pairs_lsh_empty_and_allnull_frames(spark):

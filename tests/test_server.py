@@ -243,16 +243,12 @@ def test_warm_bm25_after_add_n(spark):
 
 
 def test_warm_probe_ivf_method(spark):
-    """method='ivf' warm probe: cold until an IVF build for the property
-    exists in the plan-keyed cache (it never lives in cat._materialized),
-    then warm-only requests pass."""
+    """method='ivf' warm probe: cold until the plan-keyed cache holds the
+    build this request's probe reads (another catalog's 'emb' build does
+    not count), then warm-only requests pass."""
     from helix_db_spark.catalog import _ID
-    from helix_db_spark.operators.similarity import _IVF_CACHE, ivf_index
+    from helix_db_spark.operators.similarity import ivf_index
 
-    # the plan-keyed cache is module-global: other tests (tenant ivf
-    # searches also use an 'emb' property) would make the cold probe
-    # spuriously warm when the whole suite runs
-    _IVF_CACHE.clear()
     cat = GraphCatalog(spark)
     cat.add_nodes("Doc", spark.createDataFrame(
         [(1, [1.0, 0.0]), (2, [0.0, 1.0]), (3, [0.5, 0.5])],
@@ -271,6 +267,74 @@ def test_warm_probe_ivf_method(spark):
     ivf_index(base, _ID, "emb")                # build -> cached by plan
     status, out = srv.handle("/v1/query", req, headers=warm_hdr)
     assert status == 200 and len(out["hits"]) == 2
+
+
+def test_warm_ivf_after_add_n_is_cold(spark):
+    """An AddN changes the IVF source plan: a warm-only IVF request after
+    it answers 425 and starts no build (the pre-write build is stale)."""
+    from helix_db_spark.operators.similarity import _IVF_CACHE
+
+    cat = GraphCatalog(spark)
+    cat.add_nodes("Doc", spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [0.0, 1.0]), (3, [0.5, 0.5])],
+        "k long, emb array<float>"), key_col="k")
+    srv = HelixSparkServer(HelixSparkEngine(cat))
+    req = _vector_search_request()
+    req["query"]["queries"][0]["Query"]["steps"][0]["VectorSearchNodes"][
+        "method"] = "ivf"
+    warm_hdr = {"x-helix-warm": "true"}
+    assert srv.handle("/v1/query", req)[0] == 200          # builds
+    assert srv.handle("/v1/query", req, headers=warm_hdr)[0] == 200
+
+    add = {"request_type": "write", "query": {"queries": [{"Query": {
+        "name": "w", "steps": [{"AddN": {"label": "Doc", "properties": [
+            ["k", {"Value": {"I64": 4}}],
+            ["emb", {"Value": {"F32Array": [0.0, 1.0]}}]]}}],
+        "condition": None}}], "returns": ["w"]}}
+    status, _ = srv.handle("/v1/query", add,
+                           headers={"x-helix-await-durable": "true"})
+    assert status == 200
+    before = set(_IVF_CACHE)
+    status, out = srv.handle("/v1/query", req, headers=warm_hdr)
+    assert status == 425 and "ivf" in out["error"]
+    assert set(_IVF_CACHE) == before                        # no build
+
+
+def test_warm_on_stored_catalog(spark, tmp_path):
+    """A reloaded catalog's disk layouts build nothing when probed, so
+    warm-only BM25 and LSH requests on them answer 200."""
+    from helix_db_spark.catalog import IndexEntry
+    from helix_db_spark.plans.compiler import ExecContext, StepCompiler
+    from helix_db_spark.sources.store import (load_catalog, save_catalog,
+                                              store_index)
+    from helix_db_spark.sources.tpch import load_graph
+
+    sf_dir = "/root/testdata/sf0.001"
+    cat = load_graph(spark, sf_dir)
+    cat.create_index(IndexEntry("node_text", "documents", "text"))
+    cat.create_index(IndexEntry("node_vector", "embeddings", "embedding"))
+    root = str(tmp_path / "store")
+    save_catalog(cat, root, partitions=2)
+    store_index(StepCompiler(ExecContext(cat)), root)
+    srv = HelixSparkServer(HelixSparkEngine(load_catalog(spark, root)))
+
+    vec = spark.read.parquet(f"{sf_dir}/embeddings.parquet").head()[
+        "embedding"]
+    steps = [{"TextSearchNodes": {
+        "label": "documents", "property": "text",
+        "query_text": {"Value": {"String": "spark query"}}, "k": 3}},
+        {"VectorSearchNodes": {
+            "label": "embeddings", "property": "embedding",
+            "query_vector": {"Value": {"F32Array": [float(x) for x in vec]}},
+            "k": 3, "method": "lsh"}}]
+    for step in steps:
+        req = {"request_type": "read", "query": {"queries": [{"Query": {
+            "name": "r", "steps": [step], "condition": None}}],
+            "returns": ["r"]}}
+        status, out = srv.handle("/v1/query", req,
+                                 headers={"x-helix-warm": "true"})
+        assert status == 200, out
+        assert len(out["r"]) == 3
 
 
 def test_concurrent_mixed_requests(server):
