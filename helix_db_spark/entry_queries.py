@@ -20,18 +20,29 @@ from .engine import HelixSparkEngine
 from .sources.tpch import load_graph, read_tables
 
 # ---------------------------------------------------------------------------
-# engine cache (one graph per sf_dir per process)
+# engine cache (one engine per (sf_dir, kind) per process)
 # ---------------------------------------------------------------------------
 
-_ENGINES: Dict[str, HelixSparkEngine] = {}
+_ENGINES: Dict[tuple, HelixSparkEngine] = {}
+
+
+def _memo_engine(spark: SparkSession, sf_dir: str, kind: str,
+                 build_catalog: Callable[[], object]) -> HelixSparkEngine:
+    """The memoized engine for (sf_dir, kind), rebuilt from
+    ``build_catalog()`` when the cached one is bound to another
+    SparkSession: a second session in the same app must not reuse an
+    engine holding the old session's state."""
+    key = (sf_dir, kind)
+    eng = _ENGINES.get(key)
+    if eng is None or eng.spark is not spark:
+        eng = HelixSparkEngine(build_catalog())
+        _ENGINES[key] = eng
+    return eng
 
 
 def engine_for(spark: SparkSession, sf_dir: str) -> HelixSparkEngine:
-    eng = _ENGINES.get(sf_dir)
-    if eng is None or eng.spark is not spark:
-        eng = HelixSparkEngine(load_graph(spark, sf_dir))
-        _ENGINES[sf_dir] = eng
-    return eng
+    return _memo_engine(spark, sf_dir, "graph",
+                        lambda: load_graph(spark, sf_dir))
 
 
 # On-disk index artifacts for graded probe queries, built ONCE per
@@ -365,35 +376,6 @@ def arithmetic_div_mod_neg(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-@q("within_semi_join",
-   "SELECT count(*) AS count FROM customer WHERE c_custkey IN "
-   "(SELECT o_custkey FROM orders)")
-def within_semi_join(spark, sf_dir):
-    eng = engine_for(spark, sf_dir)
-    out = eng.execute_batch(
-        dsl.read_batch()
-        .var_as("buyers", g().n("orders").out("placed_by").dedup())
-        .var_as("res", g().n("customer").within("buyers").count())
-        .returning("res"))
-    return out["res"]
-
-
-@q("without_anti_join",
-   "SELECT c_custkey FROM customer WHERE c_custkey NOT IN "
-   "(SELECT o_custkey FROM orders WHERE o_totalprice > 300000.0)")
-def without_anti_join(spark, sf_dir):
-    eng = engine_for(spark, sf_dir)
-    out = eng.execute_batch(
-        dsl.read_batch()
-        .var_as("big_buyers", g().n("orders")
-                .where(P.gt("o_totalprice", 300000.0))
-                .out("placed_by").dedup())
-        .var_as("res", g().n("customer").without("big_buyers")
-                .values("c_custkey"))
-        .returning("res"))
-    return out["res"]
-
-
 @q("union_branches",
    "SELECT n_name AS name FROM nation JOIN region "
    "ON n_regionkey = r_regionkey WHERE r_name = 'ASIA' "
@@ -416,14 +398,6 @@ def choose_conditional(spark, sf_dir):
             P.gte("o_totalprice", 200000.0),
             g().project(okey="o_orderkey", bucket=X.const("big")),
             g().project(okey="o_orderkey", bucket=X.const("small"))))
-
-
-@q("optional_passthrough",
-   "SELECT (SELECT count(*) FROM orders) + (SELECT count(*) FROM customer "
-   "WHERE c_custkey NOT IN (SELECT o_custkey FROM orders)) AS count")
-def optional_passthrough(spark, sf_dir):
-    return engine_for(spark, sf_dir).run(
-        g().n("customer").optional(g().in_("placed_by")).count())
 
 
 @q("repeat_bfs",
@@ -630,41 +604,28 @@ def bm25_text_search(spark, sf_dir):
 # the restart path of the reference (it serves from its persisted index
 # after CreateVectorIndex, helix-cli/src/config.rs:148-158). Built once
 # per (session, sf) into a collision-safe dir; the engine is memoized so
-# repeat queries measure the probe, not the reload.
-_SERVED: Dict[tuple, HelixSparkEngine] = {}
-
-
+# repeat queries measure the probe, not the reload (a new session reuses
+# the on-disk artifact and repeats only the catalog reload).
 def _served_engine(spark: SparkSession, sf_dir: str) -> HelixSparkEngine:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    eng = _SERVED.get(key)
-    # stale-session guard (same as engine_for): a second SparkSession in
-    # the same app must not reuse an engine bound to the old session's
-    # state — the round-1 session-portability failure class. The on-disk
-    # artifact is reused; only the catalog reload is repeated.
-    if eng is None or eng.spark is not spark:
-        from .catalog import GraphCatalog, IndexEntry
-        from .plans.compiler import ExecContext, StepCompiler
-        from .sources.store import load_catalog, save_catalog, store_index
-        from .sources.tpch import read_table
+    from .catalog import GraphCatalog, IndexEntry
+    from .plans.compiler import ExecContext, StepCompiler
+    from .sources.store import load_catalog, save_catalog, store_index
+    from .sources.tpch import read_table
 
-        def build(r):
-            cat = GraphCatalog(spark)
-            cat.add_nodes("documents",
-                          read_table(spark, sf_dir, "documents"),
-                          key_col="doc_id")
-            cat.add_nodes("embeddings",
-                          read_table(spark, sf_dir, "embeddings"),
-                          key_col="vec_id")
-            cat.create_index(IndexEntry("node_text", "documents", "text"))
-            cat.create_index(IndexEntry("node_vector", "embeddings",
-                                        "embedding"))
-            save_catalog(cat, r)
-            store_index(StepCompiler(ExecContext(cat)), r)
+    def build(r):
+        cat = GraphCatalog(spark)
+        cat.add_nodes("documents", read_table(spark, sf_dir, "documents"),
+                      key_col="doc_id")
+        cat.add_nodes("embeddings", read_table(spark, sf_dir, "embeddings"),
+                      key_col="vec_id")
+        cat.create_index(IndexEntry("node_text", "documents", "text"))
+        cat.create_index(IndexEntry("node_vector", "embeddings",
+                                    "embedding"))
+        save_catalog(cat, r)
+        store_index(StepCompiler(ExecContext(cat)), r)
 
-        root = _artifact_dir(spark, sf_dir, "served_cat", build)
-        eng = HelixSparkEngine(load_catalog(spark, root))
-        _SERVED[key] = eng
-    return eng
+    return _memo_engine(spark, sf_dir, "served", lambda: load_catalog(
+        spark, _artifact_dir(spark, sf_dir, "served_cat", build)))
 
 
 @q("bm25_text_search_disk", _BM25_ORACLE)
@@ -745,15 +706,6 @@ def text_contains(spark, sf_dir):
 
 def _docs(spark, sf_dir):
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
-@q("dedup_exact_groups",
-   "SELECT md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) "
-   "AS digest, min(doc_id) AS keep_id, count(*) AS n_copies "
-   "FROM documents GROUP BY 1")
-def dedup_exact_groups(spark, sf_dir):
-    from .operators.dedup import exact_dedup_groups
-    return exact_dedup_groups(_docs(spark, sf_dir), "doc_id", "text")
 
 
 @q("dedup_exact_survivors",
@@ -1514,15 +1466,6 @@ FROM kept x JOIN kept y ON x.fp = y.fp AND x.doc_id < y.doc_id
 GROUP BY 1, 2 HAVING count(*) >= 3"""
 
 
-@q("text_winnow_overlap_pairs", _WINNOW_ORACLE)
-def text_winnow_overlap_pairs(spark, sf_dir):
-    """Local-overlap candidate pairs (>= 3 shared winnowing fingerprints,
-    stop-fingerprints with df > 50 dropped before the join)."""
-    from .operators.textstats import winnow_overlap_pairs
-    return winnow_overlap_pairs(_docs(spark, sf_dir), "doc_id", "text",
-                                min_shared=3, max_df=50)
-
-
 @q("overlap_pair_mining",
    f"SELECT 'ngram' AS method, a, b, CAST(jaccard AS DOUBLE) AS score "
    f"FROM ({_NGRAM_ORACLE}) "
@@ -1535,10 +1478,8 @@ def overlap_pair_mining(spark, sf_dir):
     winnowing-fingerprint pairs (Schleimer et al. 2003 local overlap),
     unioned with a method tag. Both families stay load-bearing — drift
     in the shingle Jaccard math OR the rolling-window fingerprint
-    selection changes the value hash. The single-method entries
-    (dedup_ngram_jaccard_pairs — also the bench query — and
-    text_winnow_overlap_pairs) stay registered below the driver cap;
-    the merge freed top-50 slots for the r6 hoists."""
+    selection changes the value hash. dedup_ngram_jaccard_pairs stays
+    registered below the graded cap as the bench query."""
     from .operators.dedup import ngram_jaccard_pairs
     from .operators.textstats import winnow_overlap_pairs
 
@@ -1733,20 +1674,6 @@ def text_bpe_token_estimate(spark, sf_dir):
 # ---------------------------------------------------------------------------
 # 8. multimodal plumbing
 # ---------------------------------------------------------------------------
-
-
-@q("multimodal_frame_plan",
-   "SELECT doc_id AS media_id, unnest([i * 5000 for i in generate_series(0, "
-   "greatest(floor(length(text) * 100 / 5000), 1)::BIGINT - 1)])::BIGINT "
-   "AS frame_ts_ms FROM documents WHERE doc_id % 2 = 0")
-def multimodal_frame_plan(spark, sf_dir):
-    from .operators.multimodal import frame_sample_plan, synth_media_from_text
-    media = synth_media_from_text(_docs(spark, sf_dir), "doc_id", "text",
-                                  media_type="image")
-    media = media.withColumn(
-        "media_type", F.when(F.col("media_id") % 2 == 0, "video")
-        .otherwise("image"))
-    return frame_sample_plan(media, every_ms=5000)
 
 
 # The stand-in feature vector is sha256-seeded xorshift64 (multimodal.py:
@@ -2450,19 +2377,11 @@ def write_batch_adds(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-@q("exists_check",
-   'SELECT count(*) > 0 AS "exists" FROM customer WHERE c_acctbal > 9000.0')
-def exists_check(spark, sf_dir):
-    return engine_for(spark, sf_dir).run(
-        g().n("customer").where(P.gt("c_acctbal", 9000.0)).exists())
-
-
 @q("count_and_exists",
    "SELECT (SELECT count(*) FROM customer) AS count, "
    '(SELECT count(*) > 0 FROM customer WHERE c_acctbal > 9000.0) AS "exists"')
 def count_and_exists(spark, sf_dir):
-    """Count + Exists terminals in one graded batch (§2 rows 36-37);
-    the single-terminal variants stay registered below the driver cap."""
+    """Count + Exists terminals in one graded batch (§2 rows 36-37)."""
     eng = engine_for(spark, sf_dir)
     out = eng.execute_batch(
         dsl.read_batch()
@@ -2473,45 +2392,11 @@ def count_and_exists(spark, sf_dir):
     return out["n"].crossJoin(out["ex"])
 
 
-@q("aggregate_stats",
-   "SELECT (SELECT round(sum(l_extendedprice), 2) FROM lineitem) AS sum, "
-   "(SELECT round(avg(c_acctbal), 6) FROM customer) AS mean, "
-   "(SELECT round(min(o_totalprice), 2) FROM orders) AS lo, "
-   "(SELECT round(max(o_totalprice), 2) FROM orders) AS hi")
-def aggregate_stats(spark, sf_dir):
-    """AggregateBy Sum/Mean/Min/Max in one graded batch (§2 row 40);
-    single-aggregate variants stay registered below the driver cap."""
-    eng = engine_for(spark, sf_dir)
-    out = eng.execute_batch(
-        dsl.read_batch()
-        .var_as("s", g().n("lineitem").aggregate_by("Sum", "l_extendedprice"))
-        .var_as("m", g().n("customer").aggregate_by("Mean", "c_acctbal"))
-        .var_as("lo", g().n("orders").aggregate_by("Min", "o_totalprice"))
-        .var_as("hi", g().n("orders").aggregate_by("Max", "o_totalprice"))
-        .returning("s", "m", "lo", "hi"))
-    return (out["s"].select(F.round("sum", 2).alias("sum"))
-            .crossJoin(out["m"].select(F.round("mean", 6).alias("mean")))
-            .crossJoin(out["lo"].select(F.round("min", 2).alias("lo")))
-            .crossJoin(out["hi"].select(F.round("max", 2).alias("hi"))))
-
-
 # Global ids pack (label ordinal << 44) | natural key (catalog.py:39-42);
 # load_graph registers labels in TABLES order, so ordinals are stable:
 # region=1, nation=2, customer=3, ... (sources/tpch.py:30).
 _NATION_ID = "((2::BIGINT << 44) + n_nationkey)"
 _CUST_BASE = 3 << 44
-
-
-@q("group_collect",
-   f"SELECT n_regionkey, array_to_string(list_sort(list({_NATION_ID})), ',') "
-   "AS ids FROM nation GROUP BY n_regionkey")
-def group_collect(spark, sf_dir):
-    # Group emits ids as array<long> (compiler sort_array(collect_list));
-    # the driver's pandas canonicalization can't hash list cells, so the
-    # graded shape joins them to a scalar CSV string (values unchanged).
-    return (engine_for(spark, sf_dir)
-            .run(g().n("nation").group("n_regionkey"))
-            .withColumn("ids", F.array_join(F.col("ids"), ",")))
 
 
 @q("group_aggregate_stats",
@@ -2527,9 +2412,7 @@ def group_aggregate_stats(spark, sf_dir):
     ONE graded slot (§2 rows 36 + 38): each region's collected nation-id
     list rides next to the four scalar aggregates, so drift in EITHER
     the Group compiler path or any AggregateBy kind changes the value
-    hash. The single-entry variants (group_collect, aggregate_stats,
-    aggregate_min_max) stay registered below the driver cap — merging
-    freed top-50 slots for the r6 hoists (VERDICT r6 'next' #3/#4)."""
+    hash."""
     eng = engine_for(spark, sf_dir)
     grouped = (eng.run(g().n("nation").group("n_regionkey"))
                .withColumn("ids", F.array_join(F.col("ids"), ",")))
@@ -2545,20 +2428,6 @@ def group_aggregate_stats(spark, sf_dir):
              .crossJoin(out["lo"].select(F.round("min", 2).alias("lo")))
              .crossJoin(out["hi"].select(F.round("max", 2).alias("hi"))))
     return grouped.crossJoin(F.broadcast(stats))
-
-
-@q("aggregate_min_max",
-   "SELECT round(min(o_totalprice), 2) AS lo, round(max(o_totalprice), 2) "
-   "AS hi FROM orders")
-def aggregate_min_max(spark, sf_dir):
-    eng = engine_for(spark, sf_dir)
-    out = eng.execute_batch(
-        dsl.read_batch()
-        .var_as("lo", g().n("orders").aggregate_by("Min", "o_totalprice"))
-        .var_as("hi", g().n("orders").aggregate_by("Max", "o_totalprice"))
-        .returning("lo", "hi"))
-    return (out["lo"].select(F.round("min", 2).alias("lo"))
-            .crossJoin(out["hi"].select(F.round("max", 2).alias("hi"))))
 
 
 @q("limit_by_param",
@@ -2577,19 +2446,6 @@ def other_n_provenance(spark, sf_dir):
         g().n("customer", ids=[_CUST_BASE + k for k in (1, 2, 3)])
         .both_e("in_nation").other_n()
         .values("n_name"))
-
-
-@q("id_terminal",
-   f"SELECT {_NATION_ID} AS id FROM nation")
-def id_terminal(spark, sf_dir):
-    return engine_for(spark, sf_dir).run(g().n("nation").id_())
-
-
-@q("value_map_props",
-   "SELECT ((1::BIGINT << 44) + r_regionkey) AS id, r_name FROM region")
-def value_map_props(spark, sf_dir):
-    return engine_for(spark, sf_dir).run(
-        g().n("region").value_map("r_name"))
 
 
 @q("id_value_map",
@@ -2710,30 +2566,6 @@ def set_property_update(spark, sf_dir):
     return out["res"]
 
 
-@q("drop_cascade_counts",
-   "SELECT CAST(2 AS BIGINT) AS n_nodes, CAST(1 AS BIGINT) AS n_edges")
-def drop_cascade_counts(spark, sf_dir):
-    """Drop removes the nodes AND their incident edges (dsl.rs:3146-3147)."""
-    from .catalog import GraphCatalog
-    cat = GraphCatalog(spark)
-    cat.add_nodes("user", spark.createDataFrame(
-        [(1, "alice"), (2, "bob"), (3, "carol")],
-        "k long, name string"), key_col="k")
-    eng = HelixSparkEngine(cat)
-    out = eng.execute_batch(
-        dsl.write_batch()
-        .var_as("e1", g().n("user").where(P.eq("name", "alice"))
-                .add_e("knows", to=[2]))
-        .var_as("e2", g().n("user").where(P.eq("name", "bob"))
-                .add_e("knows", to=[3]))
-        .var_as("gone", g().n("user").where(P.eq("name", "alice")).drop())
-        .var_as("nn", g().n("user").count())
-        .var_as("ne", g().e("knows").count())
-        .returning("nn", "ne"))
-    return (out["nn"].select(F.col("count").alias("n_nodes"))
-            .crossJoin(out["ne"].select(F.col("count").alias("n_edges"))))
-
-
 @q("write_update_drop_lifecycle",
    "SELECT * FROM (VALUES ('bob', 'high', CAST(2 AS BIGINT), "
    "CAST(1 AS BIGINT)), ('carol', 'high', 2, 1)) "
@@ -2744,9 +2576,7 @@ def write_update_drop_lifecycle(spark, sf_dir):
     tier properties are set by score band, two edges added, then alice
     is dropped — which must cascade to her incident edge
     (dsl.rs:3146-3147) — and the surviving (name, tier) rows ride with
-    the post-drop node/edge counts. The single-op variants
-    (set_property_update, drop_cascade_counts) stay registered below
-    the driver cap."""
+    the post-drop node/edge counts."""
     from .catalog import GraphCatalog
     cat = GraphCatalog(spark)
     cat.add_nodes("user", spark.createDataFrame(
@@ -2803,15 +2633,16 @@ def tenant_vector_search(spark, sf_dir):
     """Multitenant index: tenant_value partitions the search space
     (dsl.rs:326-330). Separate engine so the shared engine's index stays
     single-tenant."""
-    from .catalog import GraphCatalog, IndexEntry
-    key = (sf_dir, "tenant")
-    eng = _ENGINES.get(key)
-    if eng is None or eng.spark is not spark:
-        eng = HelixSparkEngine(load_graph(spark, sf_dir))
-        eng.catalog.create_index(
+    from .catalog import IndexEntry
+
+    def build():
+        cat = load_graph(spark, sf_dir)
+        cat.create_index(
             IndexEntry("node_vector", "embeddings", "embedding",
                        tenant_property="label"), if_not_exists=True)
-        _ENGINES[key] = eng
+        return cat
+
+    eng = _memo_engine(spark, sf_dir, "tenant", build)
     vec = _query_vector(spark, sf_dir)
     df = eng.run(
         g().vector_search("embeddings", "embedding", vec, 5, tenant_value=3)
@@ -2943,26 +2774,6 @@ def vector_search_ivf_append(spark, sf_dir):
                       F.round("_distance", 4).alias("distance"))
 
 
-@q("vector_search_edges",
-   "SELECT d.doc_id, e.vec_id, round(1.0 - list_cosine_similarity("
-   "e.embedding::DOUBLE[], (SELECT embedding::DOUBLE[] FROM embeddings "
-   "WHERE vec_id = 7)), 4) AS distance "
-   "FROM documents d JOIN embeddings e ON d.doc_id = e.vec_id "
-   "ORDER BY distance, e.vec_id LIMIT 5")
-def vector_search_edges(spark, sf_dir):
-    """VectorSearchEdges: hits are edges; $from/$to address endpoints
-    (dsl.rs:2849-2863)."""
-    vec = _query_vector(spark, sf_dir)
-    df = engine_for(spark, sf_dir).run(
-        g().vector_search("has_embedding", "embedding", vec, 5,
-                          target="edges")
-        .project_list([("doc_id", "$from.doc_id"),
-                       ("vec_id", "$to.vec_id"),
-                       ("distance", "$distance")]))
-    return df.select("doc_id", "vec_id",
-                     F.round("distance", 4).alias("distance"))
-
-
 _BM25_EDGE_ORACLE = """
 WITH docs AS (SELECT doc_id, text FROM documents
               WHERE doc_id IN (SELECT vec_id FROM embeddings)),
@@ -2983,18 +2794,6 @@ scored AS (
 SELECT doc_id, round(score, 4) AS score
 FROM scored ORDER BY score DESC, doc_id LIMIT 5
 """.format(tok=_TOK.format(c="text"))
-
-
-@q("text_search_edges", _BM25_EDGE_ORACLE)
-def text_search_edges(spark, sf_dir):
-    """TextSearchEdges: BM25 over an edge text property; corpus stats are
-    computed over the edge table only (dsl.rs:2866-2883)."""
-    df = engine_for(spark, sf_dir).run(
-        g().text_search("has_embedding", "text", "spark shuffle", 5,
-                        target="edges")
-        .project_list([("doc_id", "$from.doc_id"),
-                       ("score", "$distance")]))
-    return df.select("doc_id", F.round(-F.col("score"), 4).alias("score"))
 
 
 @q("project_bindings_rows",
@@ -5053,8 +4852,7 @@ def text_zipf_fit(spark, sf_dir):
    "NOT IN (SELECT o_custkey FROM orders WHERE o_totalprice > 300000.0)")
 def within_without_filters(spark, sf_dir):
     """Merged graded slot for §2 row 14 (Within = semi join, Without =
-    anti join) — one value-hash covers both var-backed set filters; the
-    single-op variants stay below the cap."""
+    anti join) — one value-hash covers both var-backed set filters."""
     eng = engine_for(spark, sf_dir)
     out = eng.execute_batch(
         dsl.read_batch()
@@ -5594,157 +5392,51 @@ def merge_upsert_documents(spark, sf_dir):
 # The grading driver checks only the FIRST 50 queries() entries, so the
 # registry is reordered so every SURVEY §2 operator has a graded
 # representative inside the cap. Entries past 50 are extra coverage
-# (redundant variants + a few approximate ops) still exercised by
-# tools/check_oracle.py and the test suite.
+# (bench queries, oracle baselines, variants whose values no graded row
+# asserts) still exercised by tools/check_oracle.py and the test suite.
+# Why each slot holds what it does, and the history of the swaps:
+# COVERAGE.md "Graded slots".
 DRIVER_TOP50 = [
-    # sources & predicates (§2 rows 1-2, 18-31). datetime_filter demoted
-    # r10: the Timestamp family (row 27) folded into predicate_algebra's
-    # predicate tree (the count_and_exists pattern; the single-op epoch
-    # projection stays below the cap, vanilla-verified) — the freed slot
-    # grades paragraph-level dedup (VERDICT r9 #7).
+    # sources & predicates (§2 rows 1-2, 18-31; predicate_algebra also
+    # carries the Timestamp predicate, row 27)
     "count_and_exists", "nwhere_source_filter", "predicate_algebra",
     "string_predicates", "json_dotted_path",
     "case_expression", "arithmetic_projection",
-    # hops, edges, provenance (rows 10-15). two_hop_regions moved below
-    # the cap in r5: the hop family stays graded via out_hop_group_count
-    # AND the driver still executes the two-hop plan every round through
-    # entry() (it is the flagship); the freed slot grades the SemDeDup
-    # family, which previously had no driver-graded representative.
+    # hops, edges, provenance (rows 10-15); semantic_dedup_survivors holds
+    # the slot of two_hop_regions, which entry() still runs
     "out_hop_group_count", "semantic_dedup_survivors",
     "edge_endpoint_projection",
     "edge_to_nodes_dedup", "other_n_provenance",
-    # vars / set ops / control flow (rows 15-17, 41-45).
-    # within_without_filters merges the semi-join + anti-join slots
-    # (§2 row 14 is ONE row: Within/Without) — both single-op variants
-    # stay below the cap; the freed slot grades DSIR data selection.
-    # optional_passthrough demoted r7 (1-row family, and Optional's
-    # pass-through contract is also exercised by coalesce_fallback's
-    # per-stream fallback) — the freed slot grades the served on-disk
-    # ANN probe (VERDICT r6 'missing' #1 / next-round #1).
-    # union_branches demoted r8: Inject (§2 row 15) is COMPILED as a
-    # union of the injected var into the current stream, so
-    # inject_var_union's oracle is itself a UNION ALL — the Union family
-    # (row 39) stays graded through it (union_branches' multi-branch
-    # projection shape stays below the cap, vanilla-verified). The
-    # freed slot grades hybrid BM25+vector retrieval with
-    # reciprocal-rank fusion — the production search shape composing
-    # the two graded index probes, previously ungraded as a family.
+    # vars / set ops / control flow (rows 15-17, 39, 41-45; Inject compiles
+    # as a union, so inject_var_union grades Union too)
     "within_without_filters", "inject_var_union",
     "hybrid_rrf_search", "choose_conditional", "coalesce_fallback",
     "repeat_bfs",
-    # ordering / paging / aggregation (rows 9, 32-40).
-    # group_aggregate_stats merges the Group-collect slot (§2 row 36)
-    # with the AggregateBy Sum/Mean/Min/Max slot (row 38) — single-op
-    # variants (group_collect, aggregate_stats, aggregate_min_max) stay
-    # below the cap; the freed slot hoists events_value_quantiles (r6).
-    # events_value_quantiles demoted r11: the sketch family keeps its
-    # graded representative (kmv_distinct_users — the same deterministic
-    # md5-sketch machinery; the exact-percentile entry stays below the
-    # cap, vanilla-verified). The freed slot grades copurchase_pagerank:
-    # the link-analysis family (PageRank/PPR/HITS — graph.py's iterative
-    # fixpoint class, the only operator family whose per-iteration
-    # join+partial-agg shape the driver had never executed) previously
-    # had NO representative inside the cap (VERDICT r10 #8).
+    # ordering / paging / aggregation (rows 9, 32-40) + link analysis
     "order_limit_topk", "limit_by_param", "group_aggregate_stats",
     "copurchase_pagerank",
-    # terminals & output shaping (rows 46-52; id_value_map merges the Id
-    # terminal + ValueMap slots — both load-bearing via an id join)
+    # terminals & output shaping (rows 46-52)
     "id_value_map", "project_bindings_rows",
-    # search (rows 4-8). vector_search_ivf_disk (r7) grades the SERVED
-    # on-disk index layout — partition-pruned cells/ probe, the plan a
-    # reloaded production catalog executes. vector_search_ivf demoted
-    # r12: the in-memory IVF probe's centroid-rank + exact re-rank math
-    # is graded through the STRICTLY STRONGER disk row (identical
-    # ranking, plus layout + partition pruning); it stays below the cap
-    # vanilla-verified AND in the 15-query bench set. The freed slot
-    # grades the evaluation/audit family (dedup_quality_report_sampled
-    # — the bounded-sample dedup-quality audit, previously the class
-    # with no graded representative; VERDICT r11 #6).
-    # vector_search_topk demoted r13 (VERDICT r12 #5): §2 row 4's exact
-    # top-k math and compiler path (the same g().vector_search step,
-    # StepCompiler route, and rounded-distance projection) are graded
-    # through tenant_vector_search, which runs them under the
-    # multitenancy rules; the single-op entry stays below the cap
-    # vanilla-verified AND in the 15-query bench set (the
-    # two_hop_regions / events_window_agg precedent: the driver still
-    # executes the plan every round). The freed slot grades
-    # semantic_dedup_bounded — the r12 scale fix (recursive
-    # split_hot_cells cell-width bound, measured sf30 exponent 0.62 vs
-    # 1.77 unsplit) whose 2-round recursion oracle was previously
-    # ungated by the driver; the SemDeDup family now locks BOTH the
-    # exact contract (semantic_dedup_survivors) and the scale knob.
+    # search (rows 4-8): exact top-k via the tenant row, IVF via the
+    # served on-disk row, SemDeDup scale knob, dedup-quality audit
     "semantic_dedup_bounded", "vector_search_ivf_disk",
     "dedup_quality_report_sampled",
     "tenant_vector_search",
-    # edge_search_modes merges VectorSearchEdges + TextSearchEdges
-    # (§2 row 7 is one row); the freed slot grades the kNN graph family.
     "bm25_text_search", "edge_search_modes",
-    # write path + batch machinery (rows 53-63).
-    # write_update_drop_lifecycle merges the SetProperty slot (§2 row
-    # 52) with the Drop-cascade slot (rows 53-54) in one graded batch —
-    # the count_and_exists pattern; both single-op variants stay below
-    # the cap, vanilla-verified. The freed slot grades the lakehouse
-    # MERGE path (merge_upsert_documents — file-pruned upsert + manifest
-    # commit + time-travel read, the repo's durable write story and the
-    # strongest r8 artifact the driver had never graded; VERDICT r8 #5).
+    # write path + batch machinery (rows 51-63) + lakehouse MERGE
     "write_batch_adds", "write_update_drop_lifecycle",
     "merge_upsert_documents",
     "batch_condition_gate", "foreach_accumulate",
-    # LLM-pipeline: dedup / text / multimodal / streaming / dataset prep.
-    # Near-duplicate slots merged (r3 task #4, r5 task #3):
-    # dedup_pipeline_survivors chains exact dedup -> minhash LSH ->
-    # connected components in one graded slot (subsuming the separate
-    # exact_groups and minhash_survivors entries — both families stay
-    # load-bearing); text_stats_langid merges doc stats + language ID;
-    # multimodal_pipeline merges frame planning + feature extraction. The
-    # freed slots grade winnowing overlap mining and group-wise top-k
-    # curation (previously never driver-graded — VERDICT r4 'missing' #2).
-    # r6 re-pack: overlap_pair_mining merges the n-gram Jaccard + winnow
-    # pair-mining slots (both single-method entries stay below the cap;
-    # dedup_ngram_jaccard_pairs remains the bench query);
-    # dedup_embedding_cosine_pairs moved below the cap — the
-    # embedding-cosine near-dup family stays graded through
-    # semantic_dedup_survivors (IVF-celled SemDeDup over the same cosine
-    # math) and knn_graph_celled. The freed slots grade incremental
-    # dedup against the on-disk index (the bounded-probe 100 TB design,
-    # never driver-graded before) and hoist text_lm_cross_entropy (the
-    # CCNet gate curate_corpus_pipeline's lm_band composes).
-    # dedup_simhash_fingerprints demoted r8 (the swap candidate VERDICT
-    # r6 itself named): the simhash family stays below the cap with its
-    # chunk-blocked tests, and near-dup fingerprinting remains graded
-    # through dedup_pipeline_survivors (minhash LSH) + the Hamming
-    # fingerprint rows. The freed slot grades the deterministic-KMV
-    # sketch family (kmv_distinct_users — an APPROXIMATE operator whose
-    # md5-KMV estimate value-hash-matches the SQL oracle exactly, and
-    # the entry runs the filtered scale path so the threshold+fallback
-    # machinery is driver-verified).
-    # dedup_paragraph_firstwins hoisted r10 (VERDICT r9 #7): paragraph-
-    # level dedup is a first-class production stage (CCNet 3.1 / Dolma
-    # run it corpus-wide) and its oracle value-hashes the reassembled
-    # TEXT — the hardest artifact in the dedup family.
+    # LLM pipeline: one merged slot per dedup / text / multimodal /
+    # streaming / dataset-prep family
     "dedup_pipeline_survivors", "dedup_paragraph_firstwins",
     "incremental_dedup_classify",
     "kmv_distinct_users", "overlap_pair_mining",
-    # events_window_agg swapped for stream_watermarked_counts (r7): the
-    # SAME tumbling-window aggregation and the SAME oracle, but executed
-    # by the Structured Streaming engine in watermarked append mode into
-    # a file sink — the window-agg family stays graded while the row now
-    # also pins the production streaming shape (VERDICT r6 'what's
-    # wrong' #1); events_window_agg remains the batch twin below the cap
-    # and the bench query (the 15-query bench set is untouched).
     "text_stats_langid", "text_lm_cross_entropy",
     "top_quality_docs_per_source",
     "multimodal_pipeline", "stream_watermarked_counts",
     "events_sessionize",
-    # curate_corpus_pipeline (r5) subsumes the split_train_valid_test slot:
-    # its composed oracle grades split_assign AND the quality gate,
-    # repetition gate, n-gram decontamination, and exact dedup in one row
-    # (split_train_valid_test stays below the cap as local coverage).
     "curate_corpus_pipeline", "asof_purchase_features",
-    # hoisted via the r5 slot merges: DSIR importance weighting (data
-    # selection); the kNN graph slot grades the CELLED scale path since
-    # r6 (the exact quadratic baseline knn_graph_cosine stays below the
-    # cap as the oracle definition — VERDICT r5 'what's wrong' #3).
     "dsir_importance_weights", "knn_graph_celled",
 ]
 

@@ -27,19 +27,6 @@ def token_list(text: str) -> list:
     return [t for t in re.split(TOKEN_SPLIT, text.lower()) if t]
 
 
-def char_shingles(text: Column, n: int = 3) -> Column:
-    """Distinct n-grams of the whitespace-normalized lowercase text.
-    Texts shorter than n yield an empty array (guard: Spark's sequence()
-    DESCENDS when start > stop, so an unguarded sequence would fabricate
-    bogus indices)."""
-    norm = F.regexp_replace(F.lower(F.trim(text)), r"\s+", " ")
-    last = F.length(norm) - F.lit(n - 1)
-    idx = F.sequence(F.lit(1), last)
-    grams = F.transform(idx, lambda i: norm.substr(i, F.lit(n)))
-    return F.when(last >= 1, F.array_distinct(grams)) \
-        .otherwise(F.array().cast("array<string>"))
-
-
 def shingles_from_tokens(toks: Column, n: int = 2) -> Column:
     """Distinct word n-grams from an ALREADY-MATERIALIZED token array
     column. Callers must pass a real column (not an inline tokens(text)
@@ -51,13 +38,6 @@ def shingles_from_tokens(toks: Column, n: int = 2) -> Column:
     grams = F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)))
     return F.when(last >= 0, F.array_distinct(grams)) \
         .otherwise(F.array().cast("array<string>"))
-
-
-def token_shingles(text: Column, n: int = 2) -> Column:
-    """Distinct word n-grams; fewer than n tokens => empty array.
-    Prefer tokens() into a materialized column + shingles_from_tokens()
-    in hot paths (see that function's note)."""
-    return shingles_from_tokens(tokens(text), n)
 
 
 def tokenized_docs(df: DataFrame, id_col: str, text_col: str,

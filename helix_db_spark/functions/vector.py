@@ -41,15 +41,6 @@ def cosine_distance(vec_col: Column, query: Sequence[float],
     return F.lit(1.0) - dot(vec_col.cast("array<double>"), lit_vector(q)) / vn
 
 
-def l2_distance(vec_col: Column, query: Sequence[float]) -> Column:
-    q = lit_vector(query)
-    return F.sqrt(F.aggregate(
-        F.zip_with(vec_col.cast("array<double>"), q, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    ))
-
-
 def cosine_similarity_cols(a: Column, b: Column) -> Column:
     """cos(a, b) between two vector columns (pairwise joins)."""
     return dot(a.cast("array<double>"), b.cast("array<double>")) / (norm(a) * norm(b))

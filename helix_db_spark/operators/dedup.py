@@ -30,9 +30,8 @@ from pyspark.sql import functions as F
 
 from ..cache import hold
 from ..functions.io import atomic_write_json
-from ..functions.text import char_shingles, md5_long, md5_long32, \
-    shingle_rows, shingles_from_tokens, token_shingles, tokenized_docs, \
-    tokens
+from ..functions.text import md5_long, md5_long32, shingle_rows, \
+    shingles_from_tokens, tokenized_docs, tokens
 from .sampling import md5_unit
 
 # fixed universal-hash prime: with 32-bit inputs and 31-bit multipliers,
@@ -122,21 +121,8 @@ def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _shingle_sets(df: DataFrame, id_col: str, text_col: str,
-                  n: int, use_tokens: bool) -> DataFrame:
-    """(id, _sh: array<string>) with the tokenizer materialized into a real
-    column first — see shingles_from_tokens() for why."""
-    if use_tokens:
-        base = df.select(F.col(id_col), tokens(F.col(text_col)).alias("_tk"))
-        return base.select(F.col(id_col),
-                           shingles_from_tokens(F.col("_tk"), n).alias("_sh"))
-    return df.select(F.col(id_col),
-                     char_shingles(F.col(text_col), n).alias("_sh"))
-
-
 def minhash_signatures(df: DataFrame, id_col: str, text_col: str,
                        num_hashes: int = 64, shingle_size: int = 3,
-                       use_tokens: bool = True,
                        max_tokens: Optional[int] = None) -> DataFrame:
     """(id, sig: array<long>[num_hashes]) — min over shingles of
     (a * md5_long(shingle) + b) mod p per permutation.
@@ -146,14 +132,10 @@ def minhash_signatures(df: DataFrame, id_col: str, text_col: str,
     explode on pathological inputs (quality knob — see
     functions.text.shingle_rows).
     """
-    if use_tokens:
-        # distinct=False: min() is idempotent over duplicate shingles, so
-        # the per-doc dedup shuffle would be pure waste.
-        ex = shingle_rows(df, id_col, text_col, shingle_size, distinct=False,
-                          max_tokens=max_tokens)
-    else:
-        sh = _shingle_sets(df, id_col, text_col, shingle_size, use_tokens)
-        ex = sh.select(F.col(id_col), F.explode("_sh").alias("_s"))
+    # distinct=False: min() is idempotent over duplicate shingles, so
+    # the per-doc dedup shuffle would be pure waste.
+    ex = shingle_rows(df, id_col, text_col, shingle_size, distinct=False,
+                      max_tokens=max_tokens)
     # materialize the md5-derived hash ONCE per shingle — each of the
     # num_hashes aggregates below reuses the column instead of re-hashing.
     # try_* arithmetic: bit-identical to +/*/% here (h is 32-bit, a 31-bit
@@ -483,7 +465,6 @@ def simhash_pairs(df: DataFrame, id_col: str, text_col: str,
 
 def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
                         n: int = 3, threshold: float = 0.5,
-                        use_tokens: bool = True,
                         max_tokens: Optional[int] = None,
                         max_df: Optional[int] = None,
                         max_candidate_pairs: "Optional[int | str]" = "auto"
@@ -545,14 +526,10 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
     # two verify join-backs) — materialize once. Built map-only (r9):
     # tokenized_docs barrier -> distinct shingle array -> per-shingle
     # hash, no explode+window+collect_list round trip.
-    if use_tokens:
-        base = tokenized_docs(df, id_col, text_col, max_tokens) \
-            .withColumnRenamed(id_col, "_doc")
-        sh = base.select("_doc",
-                         shingles_from_tokens(F.col("_tk"), n).alias("_sh"))
-    else:
-        sh = _shingle_sets(df, id_col, text_col, n, use_tokens) \
-            .withColumnRenamed(id_col, "_doc")
+    base = tokenized_docs(df, id_col, text_col, max_tokens) \
+        .withColumnRenamed(id_col, "_doc")
+    sh = base.select("_doc",
+                     shingles_from_tokens(F.col("_tk"), n).alias("_sh"))
     hashes = F.array_distinct(
         F.transform(F.col("_sh"), lambda s: md5_long(s)))
     sets = _mat(sh.select("_doc", hashes.alias("_hs"))

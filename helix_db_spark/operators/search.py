@@ -22,9 +22,8 @@ query error; unknown tenant => empty; enforced here.
 
 from __future__ import annotations
 
-import math
 from collections import Counter
-from typing import Optional, Sequence
+from typing import Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -168,13 +167,10 @@ def vector_search(compiler, step):
                             nprobe=nprobe, pre_filter=tenant_cond,
                             refine_iters=iters)
     else:
-        try:
-            aug = build_vector_index(compiler, step.label, step.property,
-                                     step.target)
-            dist = cosine_distance(F.col(step.property), query,
-                                   norm_col=F.col("__vnorm"))
-        except KeyError:
-            raise
+        aug = build_vector_index(compiler, step.label, step.property,
+                                 step.target)
+        dist = cosine_distance(F.col(step.property), query,
+                               norm_col=F.col("__vnorm"))
         aug = _apply_tenant(compiler, aug, entry, step.tenant_value)
         hits = (aug.withColumn(_DIST, dist)
                    .orderBy(F.col(_DIST).asc(), F.col(_ID).asc())

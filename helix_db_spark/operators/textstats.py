@@ -284,7 +284,8 @@ def repetition_stats(df: DataFrame, id_col: str, text_col: str,
         arr = F.array_sort(F.transform(
             F.sequence(F.lit(1), F.size("_toks") - F.lit(n - 1)),
             lambda i: F.concat_ws(" ", F.slice("_toks", i, n))))
-        # guard: sequence() DESCENDS when start > stop (see char_shingles)
+        # guard: sequence() DESCENDS when start > stop, which would
+        # fabricate bogus indices (as in shingles_from_tokens)
         return F.when(F.size("_toks") >= n, arr) \
             .otherwise(F.array().cast("array<string>"))
 

@@ -61,14 +61,6 @@ def word_frequencies(docs: DataFrame, text_col: str = "text",
     return wf
 
 
-def _pair_counts(vocab: dict[tuple[str, ...], int]) -> dict:
-    counts: dict[tuple[str, str], int] = {}
-    for syms, freq in vocab.items():
-        for a, b in zip(syms, syms[1:]):
-            counts[(a, b)] = counts.get((a, b), 0) + freq
-    return counts
-
-
 def _merge_word(syms: tuple[str, ...], pair: tuple[str, str],
                 joined: str) -> tuple[str, ...]:
     out = []

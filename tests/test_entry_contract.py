@@ -32,89 +32,58 @@ def test_driver_top50_covers_survey_ops():
     assert names[:50] == DRIVER_TOP50
     assert len(set(DRIVER_TOP50)) == 50
     critical = {
-        # one per §2 family that has no second representative in the top 50
-        # datetime_filter demoted r10: the Timestamp family (§2 row 27)
-        # is carried by predicate_algebra's folded-in datetime predicate;
-        # the freed slot grades paragraph-level dedup
+        # one per §2 family that has no second representative in the top
+        # 50; why each slot holds what it does: COVERAGE.md "Graded slots"
         "count_and_exists", "nwhere_source_filter", "predicate_algebra",
         "string_predicates", "json_dotted_path",
         "case_expression", "arithmetic_projection", "limit_by_param",
         "out_hop_group_count", "semantic_dedup_survivors",
         "edge_endpoint_projection",
         "edge_to_nodes_dedup", "other_n_provenance",
-        "within_without_filters",  # merged semi+anti slot (§2 row 14)
-        # union_branches demoted r8: Inject compiles as a union, so
-        # inject_var_union's UNION ALL oracle keeps §2 row 39 graded;
-        # the slot grades hybrid BM25+vector RRF retrieval instead
+        "within_without_filters",
         "inject_var_union", "hybrid_rrf_search",
-        # optional_passthrough demoted r7: Optional's pass-through
-        # contract is exercised by coalesce_fallback's per-stream
-        # fallback; the freed slot grades the served on-disk ANN probe
         "choose_conditional", "coalesce_fallback",
         "repeat_bfs", "order_limit_topk",
-        "group_aggregate_stats",   # merged Group + AggregateBy (rows 36+38)
+        "group_aggregate_stats",
         "id_value_map",
-        # vector_search_topk demoted r13: §2 row 4's exact top-k runs
-        # through the SAME compiled vector_search step inside
-        # tenant_vector_search (multitenancy on top), and the single-op
-        # entry stays below the cap + in the bench set; the slot grades
-        # the SemDeDup scale knob (semantic_dedup_bounded) instead
         "project_bindings_rows", "semantic_dedup_bounded",
-        # vector_search_ivf demoted r12: the IVF probe family is graded
-        # through the strictly stronger disk row (same centroid-rank +
-        # exact re-rank, plus the served layout + partition pruning);
-        # the slot grades the audit family instead (VERDICT r11 #6)
         "vector_search_ivf_disk",
         "dedup_quality_report_sampled",
         "tenant_vector_search", "bm25_text_search",
-        "edge_search_modes",       # merged edge-target search slot (row 7)
-        # set_property_update + drop_cascade_counts merged r9 into one
-        # write-lifecycle batch (the count_and_exists pattern); the
-        # single-op variants stay below the cap, and the freed slot
-        # grades the lakehouse MERGE path (file-pruned upsert + manifest
-        # commit + time travel — VERDICT r8 #5)
+        "edge_search_modes",
         "write_batch_adds", "write_update_drop_lifecycle",
         "merge_upsert_documents",
         "batch_condition_gate", "foreach_accumulate",
-        # LLM-pipeline + dataset-prep families (merged slots are the sole
-        # graded representative of their operators)
         "dedup_pipeline_survivors",
-        # dedup_simhash_fingerprints demoted r8 (VERDICT r6's named swap
-        # candidate): near-dup fingerprinting stays graded through the
-        # minhash chain + Hamming rows; the slot grades the KMV sketch
-        # family instead
         "kmv_distinct_users",
-        # merged n-gram Jaccard + winnow pair mining (r6); the
-        # embedding-cosine near-dup family is graded through
-        # semantic_dedup_survivors (same cosine math, IVF-celled)
         "overlap_pair_mining",
-        # the window-agg family is graded through the streaming twin
-        # since r7 (same aggregation + oracle, executed by the streaming
-        # engine in watermarked append mode; events_window_agg stays
-        # below the cap as the batch twin and the bench query)
         "text_stats_langid", "top_quality_docs_per_source",
         "multimodal_pipeline", "stream_watermarked_counts",
         "events_sessionize",
-        # the composed curation slot grades split_assign + quality gate +
-        # repetition gate + decontamination + exact dedup (r5)
         "curate_corpus_pipeline", "asof_purchase_features",
-        # r5/r6 hoists into the merge-freed slots: DSIR, the CELLED kNN
-        # scale path, on-disk incremental dedup, and the CCNet
-        # perplexity gate. events_value_quantiles demoted r11: the
-        # sketch family stays graded through kmv_distinct_users (same
-        # deterministic md5-sketch machinery); the slot grades the
-        # link-analysis family instead (VERDICT r10 #8)
         "dsir_importance_weights", "knn_graph_celled",
         "incremental_dedup_classify", "copurchase_pagerank",
         "text_lm_cross_entropy",
-        # r10 hoist: paragraph-level dedup (CCNet 3.1 / Dolma), whose
-        # oracle value-hashes the reassembled TEXT
         "dedup_paragraph_firstwins",
     }
     assert critical <= set(DRIVER_TOP50)
     # every top-50 entry has a DuckDB oracle (full value-hash grading)
     rows_only = {n for n in DRIVER_TOP50 if REGISTRY[n][1] is None}
     assert rows_only == set()
+
+
+def test_benchmarked_entries_stay_registered():
+    """A registry trim must not delete an entry a benchmark runs, nor
+    move the graded top 50 off the front of the registry."""
+    import bench
+    from helix_db_spark.entry_queries import DRIVER_TOP50, REGISTRY
+    from perfbench.trace import BATCH_ENTRIES
+
+    names = list(REGISTRY)
+    assert names[:50] == DRIVER_TOP50
+    missing = [n for n in (*bench.BENCH_QUERIES, *BATCH_ENTRIES)
+               if n not in REGISTRY]
+    assert missing == []
 
 
 def test_artifact_dir_memoizes_per_session(spark):
