@@ -10,7 +10,7 @@ in-edges at 100 TB), explicit salting keeps every task bounded:
 - small side: explode each row to all n salt values;
 - join on (key, salt) — each hot key's rows spread across n tasks.
 
-Result-identical to the plain equi-join (tested); use when a key histogram
+Result-identical to the plain equi-join (tested); use when skew_report
 shows hot keys and the small side is too big to broadcast.
 """
 
@@ -34,13 +34,6 @@ def salted_join(big: DataFrame, small: DataFrame, key: str,
         SALT_COL, F.explode(F.sequence(F.lit(0), F.lit(salt - 1))))
     out = b.join(s, on=[key, SALT_COL], how=how)
     return out.drop(SALT_COL)
-
-
-def key_histogram(df: DataFrame, key: str, top: int = 20) -> DataFrame:
-    """Per-key row counts, heaviest first — the skew diagnosis query to run
-    before reaching for salting."""
-    return (df.groupBy(key).agg(F.count(F.lit(1)).alias("n"))
-            .orderBy(F.col("n").desc()).limit(top))
 
 
 def skew_report(df: DataFrame, key: str, top: int = 10) -> DataFrame:

@@ -27,6 +27,8 @@ animated GIF with GIF89a disposal compositing.
 from __future__ import annotations
 
 import hashlib
+import io
+import math
 from typing import Iterator, Optional
 
 import numpy as np
@@ -1028,8 +1030,6 @@ class _MiniImageBackend:
 
     @classmethod
     def open(cls, fp) -> _MiniPngImage:
-        import io
-
         data = fp.read()
         if data[:8] == _MiniPngBackend._MAGIC:
             return _MiniPngBackend.open(io.BytesIO(data))
@@ -1686,8 +1686,6 @@ class _MiniAudioBackend:
 
     @staticmethod
     def read(fp):
-        import io
-
         data = fp.read()
         if data[:4] == b"RIFF":
             return _MiniWavBackend.read(io.BytesIO(data))
@@ -1782,11 +1780,10 @@ class _MiniAviBackend:
             # is implied and spliced back in). First COMPRESSED codec
             # with a dependency-free decode path (r6, rides the stdlib
             # baseline JPEG decoder).
-            import io as _io
             for rf in raw_frames:
                 try:
                     img = _MiniJpegBackend.open(
-                        _io.BytesIO(_mjpeg_frame_bytes(bytes(rf))))
+                        io.BytesIO(_mjpeg_frame_bytes(bytes(rf))))
                     frames.append(np.asarray(img.convert("RGB"),
                                              dtype=np.uint8))
                 except ValueError:
@@ -1802,8 +1799,6 @@ class _MiniVideoBackend:
 
     @staticmethod
     def open(fp) -> _MiniAviVideo:
-        import io
-
         data = fp.read()
         if data[:6] in (b"GIF87a", b"GIF89a"):
             return _MiniGifBackend.open_video(io.BytesIO(data))
@@ -1835,6 +1830,58 @@ def _try_decode_backend(media_type: str):
         if media_type == "video":
             return _MiniVideoBackend
     return None
+
+
+def _map_media(df: DataFrame, content_col: str, kind: str, fields: list,
+               probe) -> DataFrame:
+    """The per-cell media map every decode operator shares: the input
+    columns plus ``fields`` (``(name, DataType)`` pairs), filled by
+    ``probe(backend, stream) -> tuple | None`` once per cell over Arrow
+    batches (mapInPandas), with the backend ``_try_decode_backend(kind)``
+    picks. NULL bytes, a probe that raises (undecodable bytes) or a probe
+    that returns None give a null row, never a crash. Integer columns
+    carry pandas' nullable Int32/Int64 so a null stays null through Arrow
+    instead of turning the column into floats."""
+    backend = _try_decode_backend(kind)
+    schema = T.StructType(list(df.schema.fields) +
+                          [T.StructField(n, t) for n, t in fields])
+    dtypes = ["Int32" if isinstance(t, T.IntegerType) else
+              "Int64" if isinstance(t, T.LongType) else None
+              for _, t in fields]
+    nulls = (None,) * len(fields)
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            cols = [[] for _ in fields]
+            for b in pdf[content_col]:
+                try:
+                    vals = (None if b is None
+                            else probe(backend, io.BytesIO(bytes(b))))
+                except Exception:  # undecodable bytes -> null row
+                    vals = None
+                for col, v in zip(cols, nulls if vals is None else vals):
+                    col.append(v)
+            for (name, _), dtype, col in zip(fields, dtypes, cols):
+                pdf[name] = (col if dtype is None
+                             else pd.array(col, dtype=dtype))
+            yield pdf
+
+    return df.mapInPandas(run, schema)
+
+
+def _first_channel(backend, fp):
+    """Decode one clip -> (first channel as float64 samples, rate)."""
+    data, rate = backend.read(fp)
+    arr = np.asarray(data, dtype=np.float64)
+    return (arr[:, 0] if arr.ndim > 1 else arr), rate
+
+
+def _mono_pcm16(backend, fp):
+    """Decode one clip -> (first channel on the 16-bit integer lattice,
+    rate). For PCM16 sources the lattice is the codec's own, i.e.
+    lossless; for others it is a quantization (np.rint)."""
+    arr, rate = _first_channel(backend, fp)
+    return np.rint(arr * 32768.0).astype(np.int64), rate
 
 
 def deterministic_features(content: bytes, dim: int = FEATURE_DIM) -> list:
@@ -1869,68 +1916,31 @@ def extract_features(df: DataFrame, content_col: str = "content",
     return df.mapInPandas(run, schema)
 
 
-def decode_image(df: DataFrame, content_col: str = "content",
-                 out_col: str = "pixels",
-                 stats_only: bool = True) -> DataFrame:
+def decode_image(df: DataFrame, content_col: str = "content") -> DataFrame:
     """binary -> decoded image stats via mapInPandas (Arrow batches).
 
     Real decode path: PIL when installed, else the built-in pure-python
     PNG backend (always available). Each Arrow batch decodes images and
     emits (decoded_width, decoded_height, mode, mean_luma) — the summary
-    columns a training-data pipeline filters on. ``stats_only=False``
-    additionally carries the raw pixel bytes (RGB, row-major) in
-    ``out_col``; keep it off for wide scans, pixel tensors belong in the
-    downstream model reader. Undecodable bytes yield null columns, never a
-    crash.
+    columns a training-data pipeline filters on; pixel tensors belong in
+    the downstream model reader. Undecodable bytes yield null columns,
+    never a crash.
     """
-    backend = _try_decode_backend("image")
-    if backend is None:  # pragma: no cover — MiniPNG fallback always exists
-        raise NotImplementedError(
-            "no image decode backend available; "
-            "use extract_features() for the deterministic stand-in path")
+    luma_w = np.array([0.299, 0.587, 0.114])
 
-    fields = list(df.schema.fields) + [
-        T.StructField("decoded_width", T.IntegerType()),
-        T.StructField("decoded_height", T.IntegerType()),
-        T.StructField("mode", T.StringType()),
-        T.StructField("mean_luma", T.DoubleType()),
-    ]
-    if not stats_only:
-        fields.append(T.StructField(out_col, T.BinaryType()))
-    schema = T.StructType(fields)
+    def probe(backend, fp):
+        img = backend.open(fp)
+        arr = np.asarray(img.convert("RGB"), dtype=np.uint8)
+        # ITU-R BT.601 luma over the decoded pixels
+        return (img.width, img.height, img.mode,
+                float((arr @ luma_w).mean()))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-
-        for pdf in batches:
-            ws, hs, modes, lumas, pixels = [], [], [], [], []
-            for b in pdf[content_col]:
-                if b is None:
-                    ws.append(None); hs.append(None); modes.append(None)
-                    lumas.append(None); pixels.append(None)
-                    continue
-                try:
-                    img = backend.open(io.BytesIO(bytes(b)))
-                    rgb = img.convert("RGB")
-                    arr = np.asarray(rgb, dtype=np.uint8)
-                    ws.append(img.width); hs.append(img.height)
-                    modes.append(img.mode)
-                    # ITU-R BT.601 luma over the decoded pixels
-                    lumas.append(float(
-                        (arr @ np.array([0.299, 0.587, 0.114])).mean()))
-                    pixels.append(arr.tobytes() if not stats_only else None)
-                except Exception:  # undecodable bytes -> null row, not a crash
-                    ws.append(None); hs.append(None); modes.append(None)
-                    lumas.append(None); pixels.append(None)
-            pdf["decoded_width"] = pd.array(ws, dtype="Int32")
-            pdf["decoded_height"] = pd.array(hs, dtype="Int32")
-            pdf["mode"] = modes
-            pdf["mean_luma"] = lumas
-            if not stats_only:
-                pdf[out_col] = pixels
-            yield pdf
-
-    return df.mapInPandas(run, schema)
+    return _map_media(df, content_col, "image", [
+        ("decoded_width", T.IntegerType()),
+        ("decoded_height", T.IntegerType()),
+        ("mode", T.StringType()),
+        ("mean_luma", T.DoubleType()),
+    ], probe)
 
 
 def decode_audio(df: DataFrame, content_col: str = "content") -> DataFrame:
@@ -1944,48 +1954,20 @@ def decode_audio(df: DataFrame, content_col: str = "content") -> DataFrame:
     a crash. Same shape as decode_image: bytes stay Arrow-batched, one
     decode per clip, no row-at-a-time Python in the scan.
     """
-    backend = _try_decode_backend("audio")
-    if backend is None:  # pragma: no cover — MiniWav fallback always exists
-        raise NotImplementedError(
-            "no audio decode backend available; "
-            "use extract_features() for the deterministic stand-in path")
+    def probe(backend, fp):
+        data, rate = backend.read(fp)
+        arr = np.asarray(data, dtype=np.float64)
+        n = int(arr.shape[0])
+        return (int(rate), 1 if arr.ndim == 1 else int(arr.shape[1]),
+                int(round(n * 1000.0 / rate)) if rate else None,
+                float(np.sqrt(np.mean(arr ** 2))) if n else 0.0)
 
-    schema = T.StructType(list(df.schema.fields) + [
-        T.StructField("sample_rate", T.IntegerType()),
-        T.StructField("channels", T.IntegerType()),
-        T.StructField("duration_ms", T.LongType()),
-        T.StructField("mean_rms", T.DoubleType()),
-    ])
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-
-        for pdf in batches:
-            rates, chans, durs, rmss = [], [], [], []
-            for b in pdf[content_col]:
-                if b is None:
-                    rates.append(None); chans.append(None)
-                    durs.append(None); rmss.append(None)
-                    continue
-                try:
-                    data, rate = backend.read(io.BytesIO(bytes(b)))
-                    arr = np.asarray(data, dtype=np.float64)
-                    ch = 1 if arr.ndim == 1 else int(arr.shape[1])
-                    n = int(arr.shape[0])
-                    rates.append(int(rate)); chans.append(ch)
-                    durs.append(int(round(n * 1000.0 / rate)) if rate else None)
-                    rmss.append(float(np.sqrt(np.mean(arr ** 2)))
-                                if n else 0.0)
-                except Exception:  # undecodable bytes -> null row, not a crash
-                    rates.append(None); chans.append(None)
-                    durs.append(None); rmss.append(None)
-            pdf["sample_rate"] = pd.array(rates, dtype="Int32")
-            pdf["channels"] = pd.array(chans, dtype="Int32")
-            pdf["duration_ms"] = pd.array(durs, dtype="Int64")
-            pdf["mean_rms"] = rmss
-            yield pdf
-
-    return df.mapInPandas(run, schema)
+    return _map_media(df, content_col, "audio", [
+        ("sample_rate", T.IntegerType()),
+        ("channels", T.IntegerType()),
+        ("duration_ms", T.LongType()),
+        ("mean_rms", T.DoubleType()),
+    ], probe)
 
 
 def decode_video(df: DataFrame, content_col: str = "content",
@@ -2004,28 +1986,11 @@ def decode_video(df: DataFrame, content_col: str = "content",
     shape as decode_image/decode_audio: bytes stay Arrow-batched, one
     probe per clip, no row-at-a-time Python in the scan.
     """
-    backend = _try_decode_backend("video")
-    if backend is None:  # pragma: no cover — MiniAvi fallback always exists
-        raise NotImplementedError(
-            "no video decode backend available; "
-            "use extract_features() for the deterministic stand-in path")
-    use_av = backend.__name__ == "av" if hasattr(backend, "__name__") else False
-
-    schema = T.StructType(list(df.schema.fields) + [
-        T.StructField("decoded_width", T.IntegerType()),
-        T.StructField("decoded_height", T.IntegerType()),
-        T.StructField("frame_count", T.IntegerType()),
-        T.StructField("fps", T.DoubleType()),
-        T.StructField("video_duration_ms", T.LongType()),
-        T.StructField("mean_luma", T.DoubleType()),
-    ])
     luma_w = np.array([0.299, 0.587, 0.114])
 
-    def probe(b: bytes):
-        import io
-
-        if use_av:  # pragma: no cover — PyAV absent in this container
-            with backend.open(io.BytesIO(b)) as container:
+    def probe(backend, fp):
+        if getattr(backend, "__name__", "") == "av":  # pragma: no cover
+            with backend.open(fp) as container:
                 vs = container.streams.video[0]
                 fps = float(vs.average_rate) if vs.average_rate else None
                 n = int(vs.frames) or None
@@ -2038,7 +2003,7 @@ def decode_video(df: DataFrame, content_col: str = "content",
                 return (vs.codec_context.width, vs.codec_context.height,
                         n, fps, dur,
                         float(np.mean(lumas)) if lumas else None)
-        vid = backend.open(io.BytesIO(b))
+        vid = backend.open(fp)
         decoded = list(vid.frames())
         step = max(1, len(decoded) // max_frames) if decoded else 1
         lumas = [float((fr @ luma_w).mean())
@@ -2046,37 +2011,14 @@ def decode_video(df: DataFrame, content_col: str = "content",
         return (vid.width, vid.height, vid.frame_count, vid.fps,
                 vid.duration_ms, float(np.mean(lumas)) if lumas else None)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            cols = {k: [] for k in ("w", "h", "n", "fps", "dur", "luma")}
-            for b in pdf[content_col]:
-                try:
-                    vals = probe(bytes(b)) if b is not None else (None,) * 6
-                except Exception:  # undecodable -> null row, not a crash
-                    vals = (None,) * 6
-                for k, v in zip(cols, vals):
-                    cols[k].append(v)
-            pdf["decoded_width"] = pd.array(cols["w"], dtype="Int32")
-            pdf["decoded_height"] = pd.array(cols["h"], dtype="Int32")
-            pdf["frame_count"] = pd.array(cols["n"], dtype="Int32")
-            pdf["fps"] = cols["fps"]
-            pdf["video_duration_ms"] = pd.array(cols["dur"], dtype="Int64")
-            pdf["mean_luma"] = cols["luma"]
-            yield pdf
-
-    return df.mapInPandas(run, schema)
-
-
-def resize_meta(df: DataFrame, max_side: int = 256) -> DataFrame:
-    """Pure-metadata resize planning (no decode): computes target dims
-    preserving aspect ratio — JVM-side arithmetic on the meta struct."""
-    w, h = F.col("meta.width"), F.col("meta.height")
-    scale = F.least(F.lit(float(max_side)) / w, F.lit(float(max_side)) / h,
-                    F.lit(1.0))
-    return df.withColumn("target_width",
-                         F.round(w * scale).cast("int")) \
-             .withColumn("target_height",
-                         F.round(h * scale).cast("int"))
+    return _map_media(df, content_col, "video", [
+        ("decoded_width", T.IntegerType()),
+        ("decoded_height", T.IntegerType()),
+        ("frame_count", T.IntegerType()),
+        ("fps", T.DoubleType()),
+        ("video_duration_ms", T.LongType()),
+        ("mean_luma", T.DoubleType()),
+    ], probe)
 
 
 def frame_sample_plan(df: DataFrame, every_ms: int = 1000) -> DataFrame:
@@ -2194,70 +2136,34 @@ def synth_wav_pcm16(df: DataFrame, id_col: str = "doc_id",
 def audio_time_features(df: DataFrame,
                         content_col: str = "content") -> DataFrame:
     """Decode (real backend) -> EXACT time-domain features over the
-    recovered 16-bit integer lattice: sample count, duration, zero
-    crossings (sign flips between adjacent samples), peak |s|, integer
-    energy sum(s^2), and rms = sqrt(energy/n)/32768. All but rms are pure
-    integers, and rms is one IEEE sqrt+div over exact integers — so a SQL
-    oracle that regenerates the waveform matches value-for-value (the
-    audio-curation gates: silence = low rms/peak, tonal vs noisy = zcr).
-    For non-PCM16 sources the 16-bit lattice is a quantization (np.rint);
-    for PCM16 it is the codec's own lattice, i.e. lossless."""
-    backend = _try_decode_backend("audio")
+    recovered 16-bit integer lattice (_mono_pcm16): sample count,
+    duration, zero crossings (sign flips between adjacent samples), peak
+    |s|, integer energy sum(s^2), and rms = sqrt(energy/n)/32768. All but
+    rms are pure integers, and rms is one IEEE sqrt+div over exact
+    integers — so a SQL oracle that regenerates the waveform matches
+    value-for-value (the audio-curation gates: silence = low rms/peak,
+    tonal vs noisy = zcr). Empty clips yield null columns."""
+    def probe(backend, fp):
+        s, rate = _mono_pcm16(backend, fp)
+        n = int(s.shape[0])
+        if n == 0 or not rate:
+            return None
+        energy = int(np.dot(s, s))
+        # half-away-from-zero to match SQL ROUND (Python round() is
+        # banker's half-to-even; n, rate > 0 here)
+        return (n, int(math.floor(n * 1000.0 / rate + 0.5)),
+                int(np.count_nonzero((s[:-1] < 0) != (s[1:] < 0))),
+                int(np.abs(s).max()), energy,
+                math.sqrt(energy / n) / 32768.0)
 
-    schema = T.StructType(list(df.schema.fields) + [
-        T.StructField("n_samples", T.LongType()),
-        T.StructField("duration_ms", T.LongType()),
-        T.StructField("zcr", T.LongType()),
-        T.StructField("peak", T.LongType()),
-        T.StructField("energy", T.LongType()),
-        T.StructField("rms", T.DoubleType()),
-    ])
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-        import math
-
-        for pdf in batches:
-            cols = {k: [] for k in ("n_samples", "duration_ms", "zcr",
-                                    "peak", "energy", "rms")}
-
-            def null_row():
-                for v in cols.values():
-                    v.append(None)
-
-            for b in pdf[content_col]:
-                if b is None:
-                    null_row()
-                    continue
-                try:
-                    data, rate = backend.read(io.BytesIO(bytes(b)))
-                    arr = np.asarray(data, dtype=np.float64)
-                    if arr.ndim > 1:          # feature channel: first only
-                        arr = arr[:, 0]
-                    s = np.rint(arr * 32768.0).astype(np.int64)
-                    n = int(s.shape[0])
-                    if n == 0 or not rate:
-                        null_row()
-                        continue
-                    energy = int(np.dot(s, s))
-                    cols["n_samples"].append(n)
-                    # half-away-from-zero to match SQL ROUND (Python
-                    # round() is banker's half-to-even; n,rate > 0 here)
-                    cols["duration_ms"].append(
-                        int(math.floor(n * 1000.0 / rate + 0.5)))
-                    cols["zcr"].append(int(np.count_nonzero(
-                        (s[:-1] < 0) != (s[1:] < 0))))
-                    cols["peak"].append(int(np.abs(s).max()))
-                    cols["energy"].append(energy)
-                    cols["rms"].append(math.sqrt(energy / n) / 32768.0)
-                except Exception:   # undecodable -> null row, not a crash
-                    null_row()
-            for k in ("n_samples", "duration_ms", "zcr", "peak", "energy"):
-                pdf[k] = pd.array(cols[k], dtype="Int64")
-            pdf["rms"] = cols["rms"]
-            yield pdf
-
-    return df.mapInPandas(run, schema)
+    return _map_media(df, content_col, "audio", [
+        ("n_samples", T.LongType()),
+        ("duration_ms", T.LongType()),
+        ("zcr", T.LongType()),
+        ("peak", T.LongType()),
+        ("energy", T.LongType()),
+        ("rms", T.DoubleType()),
+    ], probe)
 
 
 def audio_fingerprint64(df: DataFrame,
@@ -2272,44 +2178,18 @@ def audio_fingerprint64(df: DataFrame,
     a few Hamming bits apart and dedup.hamming_near_dup_pairs finds them
     with the same banded join as image/text near-dup. Undecodable bytes
     yield a null fingerprint, never a crash."""
-    backend = _try_decode_backend("audio")
+    def probe(backend, fp):
+        s, _rate = _mono_pcm16(backend, fp)
+        n = int(s.shape[0]) - int(s.shape[0]) % 64
+        if n == 0:
+            return None
+        e = (s[:n] * s[:n]).reshape(64, n // 64).sum(axis=1)
+        total = int(e.sum())
+        return (_to_i64(sum(1 << k for k in range(64)
+                            if 64 * int(e[k]) > total)),)
 
-    schema = T.StructType(list(df.schema.fields) + [
-        T.StructField("afp64", T.LongType()),
-    ])
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-
-        for pdf in batches:
-            fps = []
-            for b in pdf[content_col]:
-                if b is None:
-                    fps.append(None)
-                    continue
-                try:
-                    data, _rate = backend.read(io.BytesIO(bytes(b)))
-                    arr = np.asarray(data, dtype=np.float64)
-                    if arr.ndim > 1:
-                        arr = arr[:, 0]
-                    s = np.rint(arr * 32768.0).astype(np.int64)
-                    n = int(s.shape[0]) - int(s.shape[0]) % 64
-                    if n == 0:
-                        fps.append(None)
-                        continue
-                    e = (s[:n] * s[:n]).reshape(64, n // 64).sum(axis=1)
-                    total = int(e.sum())
-                    v = 0
-                    for k in range(64):
-                        if 64 * int(e[k]) > total:
-                            v |= 1 << k
-                    fps.append(v - (1 << 64) if v >= (1 << 63) else v)
-                except Exception:   # undecodable -> null, not a crash
-                    fps.append(None)
-            pdf["afp64"] = pd.array(fps, dtype="Int64")
-            yield pdf
-
-    return df.mapInPandas(run, schema)
+    return _map_media(df, content_col, "audio",
+                      [("afp64", T.LongType())], probe)
 
 
 def audio_spectral_features(df: DataFrame, content_col: str = "content",
@@ -2342,17 +2222,6 @@ def audio_spectral_features(df: DataFrame, content_col: str = "content",
     blobs with model-side featurization; this is the Spark-side front end
     a training pipeline needs before embedding.
     """
-    backend = _try_decode_backend("audio")
-
-    schema = T.StructType(list(df.schema.fields) + [
-        T.StructField("n_frames", T.IntegerType()),
-        T.StructField("spectral_centroid_hz", T.DoubleType()),
-        T.StructField("spectral_bandwidth_hz", T.DoubleType()),
-        T.StructField("spectral_rolloff_hz", T.DoubleType()),
-        T.StructField("spectral_flatness", T.DoubleType()),
-        T.StructField("mel_energies", T.ArrayType(T.DoubleType())),
-    ])
-
     def mel_bank(rate: int) -> "np.ndarray":
         # HTK mel filterbank: n_mels triangles, 0 .. rate/2
         def hz_to_mel(f):
@@ -2376,75 +2245,41 @@ def audio_spectral_features(df: DataFrame, content_col: str = "content",
                     bank[m, k] = (hi - k) / (hi - mid)
         return bank
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
+    window = np.hanning(n_fft)
+    banks = {}          # rate -> filterbank (tiny, per task)
 
-        window = np.hanning(n_fft)
-        banks = {}          # rate -> filterbank (tiny, per-executor)
-        keys = ("n_frames", "spectral_centroid_hz", "spectral_bandwidth_hz",
-                "spectral_rolloff_hz", "spectral_flatness", "mel_energies")
-        for pdf in batches:
-            cols = {k: [] for k in keys}
+    def probe(backend, fp):
+        arr, rate = _first_channel(backend, fp)
+        n = int(arr.shape[0])
+        if n < n_fft or not rate:
+            return None
+        m = 1 + (n - n_fft) // hop
+        idx = np.arange(m)[:, None] * hop + np.arange(n_fft)[None, :]
+        power = np.abs(np.fft.rfft(arr[idx] * window, axis=1)) ** 2
+        spec = power.mean(axis=0)            # clip-mean spectrum
+        freqs = np.fft.rfftfreq(n_fft, d=1.0 / rate)
+        total = float(spec.sum())
+        if total <= 0.0:                     # digital silence
+            return (m, 0.0, 0.0, 0.0, 1.0, [-10.0] * n_mels)
+        cen = float((freqs * spec).sum() / total)
+        bw = float(np.sqrt(((freqs - cen) ** 2 * spec).sum() / total))
+        roll = float(freqs[np.searchsorted(np.cumsum(spec), 0.85 * total)])
+        eps = 1e-12
+        flat = float(np.exp(np.mean(np.log(spec + eps)))
+                     / (spec.mean() + eps))
+        if rate not in banks:
+            banks[rate] = mel_bank(int(rate))
+        mel = np.log10(banks[rate] @ spec + 1e-10)
+        return (m, cen, bw, roll, flat, [float(x) for x in mel])
 
-            def null_row():
-                for v in cols.values():
-                    v.append(None)
-
-            for b in pdf[content_col]:
-                if b is None:
-                    null_row()
-                    continue
-                try:
-                    data, rate = backend.read(io.BytesIO(bytes(b)))
-                    arr = np.asarray(data, dtype=np.float64)
-                    if arr.ndim > 1:
-                        arr = arr[:, 0]
-                    n = int(arr.shape[0])
-                    if n < n_fft or not rate:
-                        null_row()
-                        continue
-                    m = 1 + (n - n_fft) // hop
-                    idx = (np.arange(m)[:, None] * hop +
-                           np.arange(n_fft)[None, :])
-                    frames = arr[idx] * window
-                    power = np.abs(np.fft.rfft(frames, axis=1)) ** 2
-                    spec = power.mean(axis=0)            # clip-mean spectrum
-                    freqs = np.fft.rfftfreq(n_fft, d=1.0 / rate)
-                    total = float(spec.sum())
-                    if total <= 0.0:                     # digital silence
-                        cols["n_frames"].append(m)
-                        cols["spectral_centroid_hz"].append(0.0)
-                        cols["spectral_bandwidth_hz"].append(0.0)
-                        cols["spectral_rolloff_hz"].append(0.0)
-                        cols["spectral_flatness"].append(1.0)
-                        cols["mel_energies"].append(
-                            [-10.0] * n_mels)
-                        continue
-                    cen = float((freqs * spec).sum() / total)
-                    bw = float(np.sqrt(((freqs - cen) ** 2 * spec).sum()
-                                       / total))
-                    roll = float(freqs[np.searchsorted(
-                        np.cumsum(spec), 0.85 * total)])
-                    eps = 1e-12
-                    flat = float(np.exp(np.mean(np.log(spec + eps)))
-                                 / (spec.mean() + eps))
-                    if rate not in banks:
-                        banks[rate] = mel_bank(int(rate))
-                    mel = np.log10(banks[rate] @ spec + 1e-10)
-                    cols["n_frames"].append(m)
-                    cols["spectral_centroid_hz"].append(cen)
-                    cols["spectral_bandwidth_hz"].append(bw)
-                    cols["spectral_rolloff_hz"].append(roll)
-                    cols["spectral_flatness"].append(flat)
-                    cols["mel_energies"].append([float(x) for x in mel])
-                except Exception:   # undecodable -> null row, not a crash
-                    null_row()
-            pdf["n_frames"] = pd.array(cols["n_frames"], dtype="Int32")
-            for k in keys[1:]:
-                pdf[k] = cols[k]
-            yield pdf
-
-    return df.mapInPandas(run, schema)
+    return _map_media(df, content_col, "audio", [
+        ("n_frames", T.IntegerType()),
+        ("spectral_centroid_hz", T.DoubleType()),
+        ("spectral_bandwidth_hz", T.DoubleType()),
+        ("spectral_rolloff_hz", T.DoubleType()),
+        ("spectral_flatness", T.DoubleType()),
+        ("mel_energies", T.ArrayType(T.DoubleType())),
+    ], probe)
 
 
 def synth_png_gray(df: DataFrame, id_col: str = "doc_id",
@@ -2587,39 +2422,17 @@ def image_perceptual_hashes(df: DataFrame,
     numbers already in hand). Undecodable bytes yield null columns;
     images smaller than the hash grid yield null hashes but real luma
     stats, never a crash."""
-    backend = _try_decode_backend("image")
+    def probe(backend, fp):
+        gray = _int_gray(backend.open(fp))
+        return (_ahash64(gray), _dhash64(gray),
+                int(gray.sum()), int(gray.size))
 
-    schema = T.StructType(list(df.schema.fields) + [
-        T.StructField("ahash64", T.LongType()),
-        T.StructField("dhash64", T.LongType()),
-        T.StructField("luma_sum", T.LongType()),
-        T.StructField("n_px", T.IntegerType()),
-    ])
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-
-        for pdf in batches:
-            ah, dh, ls, npx = [], [], [], []
-            for b in pdf[content_col]:
-                if b is None:
-                    ah.append(None); dh.append(None)
-                    ls.append(None); npx.append(None)
-                    continue
-                try:
-                    gray = _int_gray(backend.open(io.BytesIO(bytes(b))))
-                    ah.append(_ahash64(gray)); dh.append(_dhash64(gray))
-                    ls.append(int(gray.sum())); npx.append(int(gray.size))
-                except Exception:   # undecodable -> null row, not a crash
-                    ah.append(None); dh.append(None)
-                    ls.append(None); npx.append(None)
-            pdf["ahash64"] = pd.array(ah, dtype="Int64")
-            pdf["dhash64"] = pd.array(dh, dtype="Int64")
-            pdf["luma_sum"] = pd.array(ls, dtype="Int64")
-            pdf["n_px"] = pd.array(npx, dtype="Int32")
-            yield pdf
-
-    return df.mapInPandas(run, schema)
+    return _map_media(df, content_col, "image", [
+        ("ahash64", T.LongType()),
+        ("dhash64", T.LongType()),
+        ("luma_sum", T.LongType()),
+        ("n_px", T.IntegerType()),
+    ], probe)
 
 
 def image_near_dup_pairs(hashes: DataFrame, id_col: str = "media_id",
@@ -2755,8 +2568,6 @@ def video_frame_stats(df: DataFrame,
     kept_names = [f.name for f in kept]
 
     def frames_of(b: bytes):
-        import io
-
         if use_av:  # pragma: no cover — PyAV absent in this container
             with backend.open(io.BytesIO(b)) as container:
                 vs = container.streams.video[0]
@@ -2805,32 +2616,14 @@ def image_luma_stats(df: DataFrame,
     per image — the image twin of video_frame_stats' per-frame columns
     (dark/blank gates, and SQL-matchable when pixels are regenerable).
     Undecodable bytes yield null columns, never a crash."""
-    backend = _try_decode_backend("image")
+    def probe(backend, fp):
+        gray = _int_gray(backend.open(fp))
+        return int(gray.sum()), int(gray.size)
 
-    schema = T.StructType(list(df.schema.fields) + [
-        T.StructField("luma_sum", T.LongType()),
-        T.StructField("n_px", T.IntegerType()),
-    ])
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-
-        for pdf in batches:
-            ls, npx = [], []
-            for b in pdf[content_col]:
-                if b is None:
-                    ls.append(None); npx.append(None)
-                    continue
-                try:
-                    gray = _int_gray(backend.open(io.BytesIO(bytes(b))))
-                    ls.append(int(gray.sum())); npx.append(int(gray.size))
-                except Exception:   # undecodable -> null row, not a crash
-                    ls.append(None); npx.append(None)
-            pdf["luma_sum"] = pd.array(ls, dtype="Int64")
-            pdf["n_px"] = pd.array(npx, dtype="Int32")
-            yield pdf
-
-    return df.mapInPandas(run, schema)
+    return _map_media(df, content_col, "image", [
+        ("luma_sum", T.LongType()),
+        ("n_px", T.IntegerType()),
+    ], probe)
 
 
 def video_fingerprint64(frames: DataFrame, id_col: str = "media_id",
@@ -2893,46 +2686,24 @@ def image_resize(df: DataFrame, content_col: str = "content",
     the thumbnail path SQL-verifiable when pixels are regenerable —
     decode(resize(synth)) luma is pure integer arithmetic both sides.
     Undecodable bytes yield null output columns, never a crash."""
-    backend = _try_decode_backend("image")
-
-    schema = T.StructType(list(df.schema.fields) + [
-        T.StructField("resized", T.BinaryType()),
-        T.StructField("resized_width", T.IntegerType()),
-        T.StructField("resized_height", T.IntegerType()),
-    ])
-
     def shrink(chan: "np.ndarray", rows: int, cols: int) -> "np.ndarray":
         sums, areas = _grid_sums(chan.astype(np.int64), rows, cols)
         return (sums // areas).astype(np.uint8)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
+    def probe(backend, fp):
+        img = backend.open(fp)
+        rows = max(1, img.height // factor)
+        cols = max(1, img.width // factor)
+        if img.mode == "L":
+            small = shrink(np.asarray(img, dtype=np.uint8), rows, cols)
+        else:
+            a = np.asarray(img.convert("RGB"), dtype=np.uint8)
+            small = np.stack([shrink(a[..., c], rows, cols)
+                              for c in range(3)], axis=2)
+        return _encode_png(small), cols, rows
 
-        for pdf in batches:
-            outs, ws, hs = [], [], []
-            for b in pdf[content_col]:
-                if b is None:
-                    outs.append(None); ws.append(None); hs.append(None)
-                    continue
-                try:
-                    img = backend.open(io.BytesIO(bytes(b)))
-                    rows = max(1, img.height // factor)
-                    cols = max(1, img.width // factor)
-                    if img.mode == "L":
-                        a = np.asarray(img, dtype=np.uint8)
-                        small = shrink(a, rows, cols)
-                    else:
-                        a = np.asarray(img.convert("RGB"), dtype=np.uint8)
-                        small = np.stack(
-                            [shrink(a[..., c], rows, cols)
-                             for c in range(3)], axis=2)
-                    outs.append(_encode_png(small))
-                    ws.append(cols); hs.append(rows)
-                except Exception:   # undecodable -> null row, not a crash
-                    outs.append(None); ws.append(None); hs.append(None)
-            pdf["resized"] = outs
-            pdf["resized_width"] = pd.array(ws, dtype="Int32")
-            pdf["resized_height"] = pd.array(hs, dtype="Int32")
-            yield pdf
-
-    return df.mapInPandas(run, schema)
+    return _map_media(df, content_col, "image", [
+        ("resized", T.BinaryType()),
+        ("resized_width", T.IntegerType()),
+        ("resized_height", T.IntegerType()),
+    ], probe)

@@ -155,8 +155,7 @@ def cluster_topics(docs: DataFrame, id_col: str, text_col: str,
     emb = hold(with_hash_embedding(
         docs.select(F.col(id_col), F.col(text_col)), text_col, "_e",
         dim).persist())
-    assigned, _ = ivf_assign(emb, id_col, "_e", max_cells,
-                             kernel=True)
+    assigned, _ = ivf_assign(emb, id_col, "_e", max_cells)
     assigned = hold(assigned.persist())
     sizes = assigned.groupBy("_cell").agg(
         F.count(F.lit(1)).alias("n_docs"))

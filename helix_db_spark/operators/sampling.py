@@ -76,9 +76,10 @@ def stratified_sample(df: DataFrame, id_col: str, strata_col: str,
 
 
 def top_k_per_group(df: DataFrame, group_col: str, order_col,
-                    k: int, tiebreak_col: Optional[str] = None,
-                    desc: bool = True) -> DataFrame:
-    """Top ``k`` rows per group (e.g. best-quality documents per source —
+                    k: int,
+                    tiebreak_col: Optional[str] = None) -> DataFrame:
+    """Top ``k`` rows per group by descending ``order_col``, ties by
+    ascending ``tiebreak_col`` (e.g. best-quality documents per source —
     the standard curation shape). One shuffle on the group key; the
     window rank never globally sorts, and with a deterministic tiebreak
     column the selection replays exactly in any engine.
@@ -87,7 +88,7 @@ def top_k_per_group(df: DataFrame, group_col: str, order_col,
     materialization) and a self-join max (one pass).
     """
     oc = F.col(order_col) if isinstance(order_col, str) else order_col
-    ordering = [oc.desc() if desc else oc.asc()]
+    ordering = [oc.desc()]
     if tiebreak_col is not None:
         ordering.append(F.col(tiebreak_col).asc())
     w = Window.partitionBy(group_col).orderBy(*ordering)
@@ -335,7 +336,7 @@ def mixture_plan(df: DataFrame, group_col: str,
 
 
 def write_shards(df: DataFrame, out_path: str, n_shards: int,
-                 id_col: str, manifest: bool = True) -> dict:
+                 id_col: str) -> dict:
     """Write a frame as ``n_shards`` deterministic, roughly equal
     training shards (plus a manifest) — the layout data loaders consume:
     shard membership is ``md5(id) % n_shards`` (stable across reruns and
@@ -343,25 +344,22 @@ def write_shards(df: DataFrame, out_path: str, n_shards: int,
     repartition on the shard key, ``shard=N/`` directories for
     partition-pruned single-shard reads. Returns the manifest dict
     (per-shard row counts + total). One shuffle on the shard key."""
-    import json
     import os
 
+    from ..functions.io import atomic_write_json
     from ..functions.text import bucket_col
 
     sharded = df.withColumn("shard", bucket_col(F.col(id_col), n_shards))
     (sharded.repartition(n_shards, "shard")
             .write.mode("overwrite").partitionBy("shard")
             .parquet(out_path))
-    info = {"n_shards": n_shards, "id_col": id_col}
-    if manifest:
-        spark = df.sparkSession
-        counts = {int(r["shard"]): r["n"] for r in
-                  spark.read.parquet(out_path).groupBy("shard")
-                       .agg(F.count(F.lit(1)).alias("n")).collect()}
-        info["rows"] = sum(counts.values())
-        info["shards"] = {str(k): counts[k] for k in sorted(counts)}
-        from ..functions.io import atomic_write_json
-        atomic_write_json(os.path.join(out_path, "_manifest.json"), info)
+    counts = {int(r["shard"]): r["n"] for r in
+              df.sparkSession.read.parquet(out_path).groupBy("shard")
+                .agg(F.count(F.lit(1)).alias("n")).collect()}
+    info = {"n_shards": n_shards, "id_col": id_col,
+            "rows": sum(counts.values()),
+            "shards": {str(k): counts[k] for k in sorted(counts)}}
+    atomic_write_json(os.path.join(out_path, "_manifest.json"), info)
     return info
 
 

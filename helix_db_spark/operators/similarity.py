@@ -183,8 +183,7 @@ def ivf_cell_budget(n: int, max_cells: int = IVF_MAX_CELLS) -> int:
 
 
 def ivf_assign(df: DataFrame, id_col: str, vec_col: str,
-               max_cells: int = IVF_MAX_CELLS,
-               kernel: bool = True) -> tuple:
+               max_cells: int = IVF_MAX_CELLS) -> tuple:
     """Deterministic IVF cell assignment with a FIXED centroid budget:
     ncells = min(max_cells, ceil(sqrt(n))). Centroids are a deterministic
     uniform sample — the first ncells rows ordered by (md5(id), id) — so
@@ -198,16 +197,12 @@ def ivf_assign(df: DataFrame, id_col: str, vec_col: str,
     broadcasts or collects; assignment is n * ncells distance evals (the
     standard IVF build cost, a matmul-shaped workload), NOT the n²/const
     of the previous id-modulo scheme whose centroid count grew linearly
-    with n. Since r10 the DEFAULT spelling is the Arrow kernel
-    (_assign_pandas — bit-identical to the min_by join over the JVM
-    path's whole domain): the r10 sf10 sweep caught the served build at
-    118s for 200k x 448 x 64d because the JVM fold is an interpreted
-    higher-order lambda, the same class the r9 batch paths already
-    escaped — "the build amortizes" does not excuse a 12x interpreted
-    build at 100 TB. ``kernel=False`` keeps the broadcast-join + min_by
-    spelling (the oracle's SQL shape, exercised in tests). At 100 TB the
-    assigned table is written partitioned by ``_cell`` so probes prune
-    to nprobe partitions.
+    with n. Assignment runs in the Arrow kernel (_assign_pandas —
+    bit-identical to the broadcast-join + min_by spelling _assign_to,
+    the oracle's SQL shape that the tests compare it against): the JVM
+    fold is an interpreted higher-order lambda, measured 12x slower on
+    the served build (PLANS.md). At 100 TB the assigned table is written
+    partitioned by ``_cell`` so probes prune to nprobe partitions.
     """
     ncells = ivf_cell_budget(df.count(), max_cells)
     # a NULL vector can never BE a centroid (its distance to everything
@@ -220,15 +215,12 @@ def ivf_assign(df: DataFrame, id_col: str, vec_col: str,
                .orderBy(F.md5(F.col("_cid").cast("string")).asc(),
                         F.col("_cid").asc())
                .limit(ncells))
-    if kernel:
-        # LEFT join: rows with NULL vectors keep flowing with a NULL
-        # _cell (the kernel skips them; an inner join would silently
-        # drop them — r10 review), matching the JVM twin's
-        # row-preserving shape
-        assigned = df.join(_assign_pandas(df, id_col, vec_col, cents),
-                           on=id_col, how="left")
-        return assigned, cents
-    return _assign_to(df, id_col, vec_col, cents), cents
+    # LEFT join: rows with NULL vectors keep flowing with a NULL _cell
+    # (the kernel skips them; an inner join would silently drop them),
+    # matching _assign_to's row-preserving shape
+    assigned = df.join(_assign_pandas(df, id_col, vec_col, cents),
+                       on=id_col, how="left")
+    return assigned, cents
 
 
 def _assign_to(df: DataFrame, id_col: str, vec_col: str,
@@ -251,11 +243,11 @@ def _assign_pandas(df: DataFrame, id_col: str, vec_col: str,
     """(id, _cell) nearest-centroid assignment (top-``nprobe`` rows when
     > 1) — the Arrow-batched twin of _assign_to (and its former
     multi-probe sibling). Since r10 this is the DEFAULT assignment
-    spelling everywhere, including the served index build (ivf_assign
-    kernel=True): the n x ncells interpreted higher-order cosine fold
-    dominated wall time at scale on the batch paths in r9, and the r10
-    sf10 sweep showed the served BUILD pays the same 12-19x interpreted
-    tax (_assign_to remains as the oracle's SQL shape, kernel=False).
+    spelling everywhere, including the served index build (ivf_assign):
+    the n x ncells interpreted higher-order cosine fold dominated wall
+    time at scale on the batch paths in r9, and the r10 sf10 sweep
+    showed the served BUILD pays the same 12-19x interpreted tax
+    (_assign_to remains as the oracle's SQL shape, compared in tests).
 
     Bit-identical to the join: dots fold in float64 via
     np.add.accumulate (documented sequential), norms follow each side's
@@ -660,8 +652,7 @@ def semantic_dedup(df: DataFrame, id_col: str, vec_col: str,
     — the graded oracle spelling. The anti-join back is on the id — a
     narrow shuffle.
     """
-    assigned, _ = ivf_assign(df, id_col, vec_col, max_cells,
-                             kernel=True)
+    assigned, _ = ivf_assign(df, id_col, vec_col, max_cells)
     # three consumers (pair-join left, pair-join right, the anti-join
     # back) — unpersisted, the assignment kernel re-runs per consumer
     # (the cluster_topics r10 lesson)
@@ -1474,8 +1465,7 @@ def knn_graph(df: DataFrame, id_col: str, vec_col: str,
         # sequential-fold math; the zip_with/aggregate expressions are
         # higher-order functions codegen can't compile, measured ~12x
         # the wall at sf1, PLANS r9). Rounding + ranking stay in Spark.
-        assigned, cents = ivf_assign(df, id_col, vec_col, max_cells,
-                                     kernel=True)
+        assigned, cents = ivf_assign(df, id_col, vec_col, max_cells)
         # the pair join reads assigned on BOTH sides (and the nprobe>1
         # path re-probes the query side) — persist so the assignment
         # kernel runs once (the cluster_topics r10 lesson)
@@ -2157,12 +2147,12 @@ def knn_graph_nndescent(df: DataFrame, id_col: str, vec_col: str,
         # in the previous round's list and were scored then). Join
         # order worst-then-vectors keys BOTH on _fdst: capped shuffles
         # once; worst is a _lead filter over the localCheckpointed
-        # state, whose _src hash partitioning survives only through the
-        # checkpoint's outputPartitioning and the alias-aware projection
-        # to _fdst (if either is lost, this join adds an exchange); and
-        # the pre-partitioned pts cache joins with zero exchange. A
-        # node missing from `worst` cannot occur (every id in a list
-        # has a list), but coalesce keeps the -inf default shape.
+        # state, which scans with UnknownPartitioning, so this join
+        # shuffles worst (node-sized) by _fdst too (PLANS.md, "NN-Descent
+        # round body"); and the pre-partitioned pts cache joins with
+        # zero exchange. A node missing from `worst` cannot occur (every
+        # id in a list has a list), but coalesce keeps the -inf default
+        # shape.
         mem = (capped.join(worst, on="_fdst", how="left")
                .join(pts.select(F.col("_id").alias("_fdst"), "_v"),
                      on="_fdst")

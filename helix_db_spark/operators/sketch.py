@@ -24,17 +24,14 @@ computable in Spark (``conv(substring(md5(x),1,15),16,10)``) and DuckDB
 Scale paths: the naive bottom-k windows EVERY distinct (group, hash)
 pair, sorting each group's whole distinct set in one task — the task
 that bounds a cluster run when one group holds 1e9 distinct values.
-``strategy="fanout"`` splits each group across 64 hash buckets, keeps k
-per bucket (every global bottom-k hash is necessarily within its own
-bucket's bottom-k), and finishes over <= 64k rows per group — same
-single scan, per-task sort cut 64x. ``strategy="filtered"`` instead
-prunes candidates with an ``approx_count_distinct``-derived hash
-threshold ``t = M * headroom*k / n_approx`` (~headroom*k expected
-survivors) before the window; bottom-k is provably inside the survivor
-set whenever >= k survive, and under-filled groups lazily recompute
-without the threshold, so every strategy returns IDENTICAL values,
-never merely close (kmv_distinct docstring has the measured trade-off;
-single-box numbers favor direct up to ~1e8 distinct).
+``strategy="filtered"`` prunes candidates with an
+``approx_count_distinct``-derived hash threshold ``t = M * headroom*k /
+n_approx`` (~headroom*k expected survivors) before the window; bottom-k
+is provably inside the survivor set whenever >= k survive, and
+under-filled groups lazily recompute without the threshold, so both
+strategies return IDENTICAL values, never merely close (kmv_distinct
+docstring has the measured trade-off; single-box numbers favor direct
+up to ~1e8 distinct).
 
 The reference engine has no sketch surface (its counts are exact LMDB
 scans, helix-db/helixdb-protocol traversal ``Count`` steps); this module
@@ -54,12 +51,11 @@ from ..functions.text import md5_long as h60  # the md5-prefix 60-bit hash
 M60 = 1 << 60          # md5 15-hex-digit prefix space
 
 
-def _bottom_k(d: DataFrame, group_cols: Sequence[str], k: int,
-              keep_rows: bool = False) -> DataFrame:
+def _bottom_k(d: DataFrame, group_cols: Sequence[str],
+              k: int) -> DataFrame:
     """Per-group bottom-k over a distinct (group, _h) frame: returns one
     row per group with ``_n`` (how many of the k slots filled — the
-    exact distinct count when < k) and ``_hk`` (k-th smallest hash), or
-    the kept rows themselves with ``keep_rows=True``.
+    exact distinct count when < k) and ``_hk`` (k-th smallest hash).
 
     Grouped: a hash-partitioned window (row_number per group). Global
     (no groups): ``orderBy().limit(k)`` instead — Catalyst compiles it
@@ -72,8 +68,6 @@ def _bottom_k(d: DataFrame, group_cols: Sequence[str], k: int,
                  .filter(F.col("_r") <= k))
     else:
         kept = d.orderBy("_h").limit(k)
-    if keep_rows:
-        return kept.drop("_r") if group_cols else kept
     return kept.groupBy(*group_cols).agg(
         F.count(F.lit(1)).alias("_n"), F.max("_h").alias("_hk"))
 
@@ -93,19 +87,14 @@ def kmv_distinct(df: DataFrame, group_cols: Sequence[str], value_col: str,
     groups with < k distinct values). NULL values are not counted —
     SQL ``count(DISTINCT x)`` semantics. Standard error ~ 1/sqrt(k-2).
 
-    Three strategies, bit-identical outputs (test-pinned):
+    Two strategies, bit-identical outputs (test-pinned):
 
     - ``"direct"``: one window over all distinct hashes per group. The
       hot group's ENTIRE distinct set sorts in a single task — fastest
       on one box (measured: 2.5s for a 20M-distinct group at
-      local[32]; neither alternative beats it below ~1e8 locally), but
+      local[32]; filtered does not beat it below ~1e8 locally), but
       the single-task sort is the cluster scale bound (memory + one
       straggler core for a 1e9-distinct group).
-    - ``"fanout"``: two-level bottom-k — keep k per (group, _h mod 64)
-      bucket (every global bottom-k hash is within its own bucket's
-      bottom-k), then finish over <= 64k rows per group. Same one scan,
-      per-task sort bounded by group_distinct/64. The recommended
-      cluster path for skewed groups.
     - ``"filtered"``: candidate set pre-pruned by an
       approx_count_distinct-derived hash threshold (expected survivors
       ~ ``headroom * k`` per group) with an exact lazy fallback for
@@ -125,27 +114,10 @@ def kmv_distinct(df: DataFrame, group_cols: Sequence[str], value_col: str,
 
     if strategy == "direct":
         agg = _bottom_k(d, groups, k)
-    elif strategy == "fanout":
-        # Two-level bottom-k: a first window over (group, _h mod F)
-        # spreads each group across F tasks (per-task sort bounded by
-        # group_distinct / F) and keeps k per bucket — the true
-        # bottom-k survives because every one of the k smallest hashes
-        # is within the smallest k OF ITS OWN BUCKET — then a second
-        # window over <= F*k rows per group finishes exactly. One scan,
-        # no side passes, bit-identical to direct. This is the
-        # recommended scale path: the hot-group task in `direct` sorts
-        # the group's ENTIRE distinct set serially, this sorts F
-        # shards of it in parallel.
-        fan = 64
-        lvl1 = _bottom_k(d.withColumn("_b", F.pmod("_h", F.lit(fan))),
-                         groups + ["_b"], k, keep_rows=True)
-        agg = _bottom_k(lvl1.select(*groups, "_h"), groups, k)
     elif strategy == "filtered":
         if not groups:
             raise ValueError("filtered strategy needs group columns; "
                              "use direct for a global count")
-        from functools import reduce
-
         # One source scan: every arm below (threshold estimate,
         # candidate pruning, exact fallback) consumes this same
         # persisted frame — without the persist, semi/anti-join
@@ -165,15 +137,8 @@ def kmv_distinct(df: DataFrame, group_cols: Sequence[str], value_col: str,
         # — prefix their key columns so attribute ids never collide
         thr_df = acd.select(*[F.col(c).alias(f"_t_{c}") for c in groups],
                             thr.alias("_thr"))
-
-        def nscond(right_prefix="_t_"):
-            # NULL group keys are groups too (the direct path's groupBy
-            # keeps them); plain `on=groups` equality would drop them
-            return reduce(lambda a, b: a & b,
-                          [F.col(c).eqNullSafe(F.col(right_prefix + c))
-                           for c in groups])
-
-        cand = (d.join(thr_df, nscond())
+        on = _ns_eq(groups, "_t_")
+        cand = (d.join(thr_df, on)
                  .filter(F.col("_h") < F.col("_thr"))
                  .select(*groups, "_h"))
         fast = _bottom_k(cand, groups, k)
@@ -185,9 +150,8 @@ def kmv_distinct(df: DataFrame, group_cols: Sequence[str], value_col: str,
         # recomputes exactly, so stragglers must be derived from the
         # full group list, never from `fast`.
         stragglers = thr_df.select(*[f"_t_{c}" for c in groups]).join(
-            covered.select(*groups), nscond(), "left_anti")
-        redo = _bottom_k(
-            d.join(stragglers, nscond(), "left_semi"), groups, k)
+            covered.select(*groups), on, "left_anti")
+        redo = _bottom_k(d.join(stragglers, on, "left_semi"), groups, k)
         agg = covered.unionByName(redo)
     else:
         raise ValueError(f"unknown strategy {strategy!r}")

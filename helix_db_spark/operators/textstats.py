@@ -85,12 +85,6 @@ def unique_token_ratio(text: Column) -> Column:
     return F.size(F.array_distinct(toks)) / F.greatest(F.size(toks), F.lit(1))
 
 
-def mean_token_length(text: Column) -> Column:
-    toks = tokens(text)
-    total = F.aggregate(toks, F.lit(0), lambda acc, t: acc + F.length(t))
-    return total / F.greatest(F.size(toks), F.lit(1))
-
-
 def quality_score(text: Column) -> Column:
     """[0, 1] heuristic quality: length sweet-spot, low punct/digit noise,
     healthy stopword presence, low repetition. Weights documented inline."""
@@ -421,7 +415,10 @@ _PII_REDACT_ORDER = ("email", "ssn", "phone", "ipv4")
 
 
 def pii_count_cols(text: Column) -> dict:
-    """{'n_<kind>': count-column} for every PII_PATTERNS kind."""
+    """{'n_<kind>': count-column} for every PII_PATTERNS kind — the
+    filter/reporting half of PII handling in a training-data pipeline.
+    Pure built-in regexp_extract_all: whole-stage codegen, zero
+    shuffles, embarrassingly parallel at any scale."""
     return {f"n_{kind}":
             F.size(F.regexp_extract_all(text, F.lit(p), 0)).cast("long")
             for kind, p in PII_PATTERNS.items()}
@@ -429,30 +426,12 @@ def pii_count_cols(text: Column) -> dict:
 
 def redact_pii_col(text: Column) -> Column:
     """Text with every PII span replaced by a ``[KIND]`` placeholder
-    (chained regexp_replace in _PII_REDACT_ORDER)."""
+    (chained regexp_replace in _PII_REDACT_ORDER, one pass per pattern
+    — still a single projection, no shuffle)."""
     for kind in _PII_REDACT_ORDER:
         text = F.regexp_replace(text, PII_PATTERNS[kind],
                                 f"[{kind.upper()}]")
     return text
-
-
-def pii_counts(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Per-document PII hit counts (one column per PII_PATTERNS kind,
-    named ``n_<kind>``) — the filter/reporting half of PII handling in a
-    training-data pipeline. Pure built-in regexp_extract_all: whole-stage
-    codegen, zero shuffles, embarrassingly parallel at any scale."""
-    cols = pii_count_cols(F.col(text_col))
-    return df.select(F.col(id_col),
-                     *[c.alias(name) for name, c in cols.items()])
-
-
-def redact_pii(df: DataFrame, id_col: str, text_col: str,
-               out_col: str = "redacted") -> DataFrame:
-    """Replace every PII span with a ``[KIND]`` placeholder (chained
-    regexp_replace, one pass per pattern — still a single projection,
-    no shuffle). Emits the redacted text alongside the id."""
-    return df.select(F.col(id_col),
-                     redact_pii_col(F.col(text_col)).alias(out_col))
 
 
 def hash_embedding(text: Column, dim: int = 64) -> Column:
@@ -821,8 +800,7 @@ def domain_stats(df: DataFrame, id_col: str, text_col: str,
 
 
 def nb_classify(train: DataFrame, test: DataFrame, id_col: str,
-                text_col: str, label_col: str,
-                broadcast_model: bool = True) -> DataFrame:
+                text_col: str, label_col: str) -> DataFrame:
     """Multinomial Naive Bayes text classifier with Laplace smoothing —
     the fastText-style "train a filter model on labeled seed data,
     score the whole corpus" step of LLM curation recipes (quality
@@ -837,11 +815,7 @@ def nb_classify(train: DataFrame, test: DataFrame, id_col: str,
     come from a doc-count groupBy. All four are vocabulary- or
     class-sized — broadcast back to the scoring side, so classifying
     100 TB is one tokenize pass + map-side joins, no shuffle on the
-    corpus beyond the per-(doc, token) count. ``broadcast_model=False``
-    drops the hint on the classes x vocabulary table and lets the
-    planner pick a sort-merge on (label, token) — the web-scale path
-    when the model itself (e.g. a 100M-term vocabulary) outgrows a
-    broadcast; identical semantics.
+    corpus beyond the per-(doc, token) count.
 
     Predict: per-doc-per-class log scores, ranked per doc on the score
     ROUNDED to 6 decimals (both engines round before ranking — the
@@ -880,8 +854,7 @@ def nb_classify(train: DataFrame, test: DataFrame, id_col: str,
                           F.explode(tokens(F.col(text_col))).alias("_t"))
     ttc = te_toks.groupBy(id_col, "_t").agg(F.count(F.lit(1)).alias("_tc"))
     stok = (ttc.crossJoin(F.broadcast(cls.select("_lbl", "_ntok")))
-               .join(F.broadcast(ct) if broadcast_model else ct,
-                     ["_lbl", "_t"], "left")
+               .join(F.broadcast(ct), ["_lbl", "_t"], "left")
                .crossJoin(F.broadcast(voc))
                .withColumn("_lnp", F.log(
                    (F.coalesce(F.col("_c"), F.lit(0)) + F.lit(1))

@@ -494,17 +494,29 @@ _WRITE_STEPS = (ast.AddN, ast.AddE, ast.SetProperty, ast.RemoveProperty,
                 ast.CreateIndex, ast.DropIndex)
 
 
-def _walk_steps(entries):
+def walk_steps(entries):
+    """Every step of a batch in pre-order: each entry's traversal,
+    recursing into sub-traversals (Union/Coalesce subs, Choose
+    then/else, Optional/Repeat sub) and into wire-protocol ForEach
+    bodies (full sub-batches of entries) — a write or search step nested
+    anywhere is seen."""
     for entry in entries:
-        if entry.foreach_body:
-            yield from _walk_steps(entry.foreach_body)
-        for step in entry.traversal.steps:
+        todo = list(entry.traversal.steps)
+        while todo:
+            step = todo.pop(0)
             yield step
+            subs = [*getattr(step, "subs", ()),
+                    *(getattr(step, a, None)
+                      for a in ("then", "else_", "sub"))]
+            todo[:0] = [s for sub in subs if sub is not None
+                        for s in sub.steps]
+        yield from walk_steps(entry.foreach_body)
 
 
 def _reject_writes(entries) -> None:
-    """Read batches reject write traversals (dsl.py:2221-2222)."""
-    for step in _walk_steps(entries):
+    """Read batches reject write traversals (dsl.py:2221-2222), however
+    deeply nested."""
+    for step in walk_steps(entries):
         if isinstance(step, _WRITE_STEPS):
             raise WireError(
                 f"write step {type(step).__name__} in a read batch")

@@ -22,8 +22,7 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from typing import Dict, Optional
 
 from .engine import HelixSparkEngine
-from .plans import ast
-from .plans.wire import WireError, parse_request
+from .plans.wire import WireError, parse_request, walk_steps
 
 SUPPORTED_BUNDLE_VERSIONS = (4, 5)
 
@@ -127,29 +126,6 @@ class HelixSparkServer:
         except Exception as ex:  # noqa: BLE001 — surface as 500, don't kill the server
             return 500, {"error": f"{type(ex).__name__}: {ex}"}
 
-    @staticmethod
-    def _walk_steps(steps):
-        """Every step in a step list, recursing into sub-traversals
-        (Union/Coalesce subs, Choose then/else, Optional/Repeat sub) — a
-        search step nested three Choose levels deep still warms/cools the
-        request (ADVICE r3: the flat walk missed them)."""
-        for step in steps:
-            yield step
-            for sub in getattr(step, "subs", ()):  # Union / Coalesce
-                yield from HelixSparkServer._walk_steps(sub.steps)
-            for attr in ("then", "else_", "sub"):  # Choose / Optional / Repeat
-                sub = getattr(step, attr, None)
-                if sub is not None:
-                    yield from HelixSparkServer._walk_steps(sub.steps)
-
-    @staticmethod
-    def _walk_entries(entries):
-        """Every batch entry, recursing into wire-protocol ForEach bodies
-        (which hold full sub-batches of entries)."""
-        for entry in entries:
-            yield entry
-            yield from HelixSparkServer._walk_entries(entry.foreach_body)
-
     def _cold_reason(self, request: dict) -> Optional[str]:
         """None if every search step's index is warm in the cache its
         probe reads, else a description of the first cold index. A
@@ -161,30 +137,29 @@ class HelixSparkServer:
 
         batch = parse_request(request)
         mat = self.engine.catalog._materialized
-        for entry in self._walk_entries(batch.entries):
-            for step in self._walk_steps(entry.traversal.steps):
-                name = type(step).__name__
-                if name == "TextSearch":
-                    kind = "bm25"
-                elif name == "VectorSearch":
-                    # the kind the step will actually probe (ADVICE r4)
-                    kind = {"lsh": "lsh", "ivf": "ivf"}.get(step.method,
-                                                           "vecnorm")
-                else:
-                    continue
-                at = (step.target, step.label, step.property)
-                disk = (kind + "_disk",) + at
-                if disk in mat:
-                    warm = mat.warm(disk)
-                elif kind == "ivf":
-                    base, iters = ivf_source(self.engine.catalog, *at)
-                    warm = _IVF_CACHE.warm(ivf_key(
-                        base, _ID, step.property, refine_iters=iters))
-                else:
-                    warm = mat.warm((kind,) + at)
-                if not warm:
-                    return (f"index for ({step.label}, {step.property}) "
-                            f"is not materialized ({kind})")
+        for step in walk_steps(batch.entries):
+            name = type(step).__name__
+            if name == "TextSearch":
+                kind = "bm25"
+            elif name == "VectorSearch":
+                # the kind the step will actually probe (ADVICE r4)
+                kind = {"lsh": "lsh", "ivf": "ivf"}.get(step.method,
+                                                       "vecnorm")
+            else:
+                continue
+            at = (step.target, step.label, step.property)
+            disk = (kind + "_disk",) + at
+            if disk in mat:
+                warm = mat.warm(disk)
+            elif kind == "ivf":
+                base, iters = ivf_source(self.engine.catalog, *at)
+                warm = _IVF_CACHE.warm(ivf_key(
+                    base, _ID, step.property, refine_iters=iters))
+            else:
+                warm = mat.warm((kind,) + at)
+            if not warm:
+                return (f"index for ({step.label}, {step.property}) "
+                        f"is not materialized ({kind})")
         return None
 
     # -- HTTP lifecycle -----------------------------------------------------

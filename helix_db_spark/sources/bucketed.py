@@ -27,13 +27,12 @@ from pyspark.sql import DataFrame, SparkSession
 
 
 def bucket_df(spark: SparkSession, df: DataFrame, name: str,
-              key: str, path: str, buckets: int = 16,
-              sort: bool = True) -> DataFrame:
+              key: str, path: str, buckets: int = 16) -> DataFrame:
     """Write ``df`` as an external bucketed table (``buckets`` hash
-    buckets on ``key``, sorted by ``key`` inside each bucket when
-    ``sort``) and return a DataFrame reading it back through the
-    catalog. Re-invoking with a name already registered this session
-    returns the existing table (build once, probe many).
+    buckets on ``key``, sorted by ``key`` inside each bucket) and return
+    a DataFrame reading it back through the catalog. Re-invoking with a
+    name already registered this session returns the existing table
+    (build once, probe many).
 
     Both sides of a future join must use the SAME bucket count for the
     exchange-free plan; sizing rule at scale: buckets ≈ table_bytes /
@@ -47,11 +46,8 @@ def bucket_df(spark: SparkSession, df: DataFrame, name: str,
     if spark.catalog.tableExists(name):
         _check_table_spec(spark, name, key, path, buckets)
     else:
-        w = df.write.format("parquet").option("path", path) \
-              .bucketBy(buckets, key)
-        if sort:
-            w = w.sortBy(key)
-        w.saveAsTable(name)
+        (df.write.format("parquet").option("path", path)
+           .bucketBy(buckets, key).sortBy(key).saveAsTable(name))
     return spark.table(name)
 
 

@@ -518,21 +518,6 @@ def test_gopher_flags_discriminate_on_corpus(spark):
     assert n == docs.count()
 
 
-def test_nb_classify_sort_merge_model_path(spark):
-    """broadcast_model=False produces identical predictions (the
-    web-scale vocabulary path: same semantics, planner-chosen join)."""
-    from helix_db_spark.operators.textstats import nb_classify
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    train = docs.filter(F.col("doc_id") % 5 != 0)
-    test = docs.filter(F.col("doc_id") % 5 == 0)
-    a = sorted(map(tuple, nb_classify(
-        train, test, "doc_id", "text", "lang").collect()))
-    b = sorted(map(tuple, nb_classify(
-        train, test, "doc_id", "text", "lang",
-        broadcast_model=False).collect()))
-    assert a == b
-
-
 # ---------------------------------------------------------------------------
 # deterministic Bloom prefilter
 # ---------------------------------------------------------------------------

@@ -88,10 +88,13 @@ def test_benchmarked_entries_stay_registered():
 
 def test_artifact_dir_memoizes_per_session(spark):
     """Graded probe entries build their on-disk artifacts ONCE per
-    (session, sf, kind) into a pid-tagged collision-safe dir (ADVICE r6:
-    the old fixed /tmp path raced across concurrent sessions); repeat
-    invocations are probe-only."""
+    (session, sf, kind) into a collision-safe dir inside the
+    application's own scratch directory (ADVICE r6: the old fixed /tmp
+    path raced across concurrent sessions); repeat invocations are
+    probe-only."""
     import os
+
+    from pyspark import SparkFiles
 
     from helix_db_spark.entry_queries import _artifact_dir
 
@@ -101,7 +104,46 @@ def test_artifact_dir_memoizes_per_session(spark):
     assert r1 == r2 and len(calls) == 1, "second call must not rebuild"
     r3 = _artifact_dir(spark, "/x", "t2", calls.append)
     assert r3 != r1 and len(calls) == 2
-    assert str(os.getpid()) in r1
+    assert os.path.dirname(r1) == SparkFiles.getRootDirectory()
+
+
+_ARTIFACT_RUN = """
+import sys
+sys.path.insert(0, sys.argv[1])
+from pyspark.sql import SparkSession
+import __spark_entry__ as e
+from helix_db_spark import entry_queries
+spark = (SparkSession.builder.master("local[1]")
+         .config("spark.ui.enabled", "false").getOrCreate())
+assert e.queries()["jsonl_ingest"](spark, sys.argv[2]).count() > 0
+print("\\n".join(entry_queries._ARTIFACTS.values()))
+"""
+
+
+def test_artifact_dirs_do_not_outlive_the_process(tmp_path):
+    """A fresh interpreter that builds a graded artifact and exits
+    without stopping Spark leaves nothing behind: no ``helix_*`` path in
+    its temp dir, and the artifact directory itself is gone."""
+    import os
+    import subprocess
+    import sys
+    import time
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, TMPDIR=str(tmp_path))
+    out = subprocess.run(
+        [sys.executable, "-c", _ARTIFACT_RUN, repo, SF_DIR],
+        env=env, cwd=str(tmp_path), capture_output=True, text=True,
+        timeout=600)
+    assert out.returncode == 0, out.stderr[-2000:]
+    roots = out.stdout.split()
+    assert roots and all(os.path.basename(r).startswith("helix_jsonl_")
+                         for r in roots)
+    assert [p for p in os.listdir(tmp_path) if p.startswith("helix_")] == []
+    deadline = time.time() + 30      # the JVM's shutdown hook may lag
+    while any(map(os.path.exists, roots)) and time.time() < deadline:
+        time.sleep(0.5)
+    assert not any(map(os.path.exists, roots)), roots
 
 
 def test_watermarked_stream_entry_plan_and_equivalence(spark):

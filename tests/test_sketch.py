@@ -46,17 +46,13 @@ def test_kmv_nulls_not_counted(spark):
 
 
 def test_kmv_scale_strategies_identical_to_direct(spark):
-    """The scale paths return EXACTLY the direct result: fanout because
-    every global bottom-k hash survives its own bucket's bottom-k;
-    filtered by proof of coverage when >= k survivors and exact
-    fallback otherwise. headroom=0.2 starves the threshold (expected
+    """The filtered scale path returns EXACTLY the direct result: by
+    proof of coverage when >= k survivors and exact fallback
+    otherwise. headroom=0.2 starves the threshold (expected
     survivors < k) so the straggler recompute genuinely executes."""
     df = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
     direct = {tuple(r) for r in kmv_distinct(
         df, ["event_type"], "user_id", k=32, strategy="direct").collect()}
-    fan = {tuple(r) for r in kmv_distinct(
-        df, ["event_type"], "user_id", k=32, strategy="fanout").collect()}
-    assert fan == direct
     for hr in (8.0, 0.2):
         filt = {tuple(r) for r in kmv_distinct(
             df, ["event_type"], "user_id", k=32, strategy="filtered",
@@ -86,9 +82,6 @@ def test_kmv_filtered_zero_survivor_group_recovers(spark):
         headroom=0.5).collect()}
     assert filt == direct
     assert len(filt) == 2          # 'hi' present, not dropped
-    fan = {tuple(r) for r in kmv_distinct(
-        df, ["g"], "v", k=4, strategy="fanout").collect()}
-    assert fan == direct
 
 
 def test_kmv_filtered_keeps_null_group(spark):
@@ -103,9 +96,6 @@ def test_kmv_filtered_keeps_null_group(spark):
         df, ["g"], "v", k=8, strategy="filtered").collect()}
     assert filt == direct
     assert {r[0] for r in filt} == {None, "a"}
-    fan = {tuple(r) for r in kmv_distinct(
-        df, ["g"], "v", k=8, strategy="fanout").collect()}
-    assert fan == direct
 
 
 def test_kmv_filtered_plan_has_no_antipatterns(spark):
@@ -201,7 +191,7 @@ def test_kmv_bad_args(spark):
 @pytest.mark.slow
 def test_kmv_strategies_fuzz(spark):
     """Hypothesis: on random frames (random group counts, value ranges,
-    duplicates, NULLs in both columns), all three strategies return
+    duplicates, NULLs in both columns), both strategies return
     bit-identical rows, and every group with < k distinct values is
     answered exactly."""
     from hypothesis import HealthCheck, given, settings
@@ -218,11 +208,11 @@ def test_kmv_strategies_fuzz(spark):
     def run(rows, k, headroom):
         df = spark.createDataFrame(rows, "g int, v int")
         got = {}
-        for strat in ("direct", "fanout", "filtered"):
+        for strat in ("direct", "filtered"):
             kw = {"headroom": headroom} if strat == "filtered" else {}
             got[strat] = {tuple(r) for r in kmv_distinct(
                 df, ["g"], "v", k=k, strategy=strat, **kw).collect()}
-        assert got["direct"] == got["fanout"] == got["filtered"]
+        assert got["direct"] == got["filtered"]
         import collections
         truth = collections.defaultdict(set)
         for g_, v in rows:

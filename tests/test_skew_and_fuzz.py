@@ -10,7 +10,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from helix_db_spark.functions.skew import key_histogram, salted_join
+from helix_db_spark.functions.skew import salted_join
 from helix_db_spark.plans.wire import WireError, parse_request
 
 
@@ -34,13 +34,6 @@ def test_salted_left_join_keeps_unmatched(spark):
     small = spark.createDataFrame([(1, "x")], "k long, s string")
     out = salted_join(big, small, "k", salt=4, how="left").collect()
     assert {(r["k"], r["s"]) for r in out} == {(1, "x"), (99, None)}
-
-
-def test_key_histogram_orders_heaviest_first(spark):
-    df = spark.createDataFrame([(1,)] * 5 + [(2,)] * 2 + [(3,)],
-                               "k long")
-    rows = key_histogram(df, "k").collect()
-    assert [(r["k"], r["n"]) for r in rows] == [(1, 5), (2, 2), (3, 1)]
 
 
 # -- wire-parser fuzz --------------------------------------------------------
@@ -83,6 +76,44 @@ def test_deep_nesting_handled():
                "name": "r", "steps": [{"N": "All"}, {"Where": steps}],
                "condition": None}}], "returns": ["r"]}}
     parse_request(raw)  # 200-deep predicate tree parses fine
+
+
+_ADDN = {"AddN": {"label": "X", "properties": []}}
+_WRITE_SUB = {"steps": [{"N": "All"}, _ADDN]}
+_NESTED_WRITES = {
+    "Optional": [{"Optional": _WRITE_SUB}],
+    "Union": [{"Union": [{"steps": [{"N": "All"}]}, _WRITE_SUB]}],
+    "Choose-then": [{"Choose": {"condition": {"IsNull": "x"},
+                                "then_traversal": _WRITE_SUB,
+                                "else_traversal": None}}],
+    "Choose-else": [{"Choose": {"condition": {"IsNull": "x"},
+                                "then_traversal": {"steps": []},
+                                "else_traversal": _WRITE_SUB}}],
+    "Coalesce": [{"Coalesce": [_WRITE_SUB]}],
+    "Repeat": [{"Repeat": {"traversal": _WRITE_SUB, "times": 2}}],
+    "Optional-in-Union": [{"Union": [{"steps": [{"Optional": _WRITE_SUB}]}]}],
+}
+
+
+def _read_request(entry):
+    return {"request_type": "read",
+            "query": {"queries": [entry], "returns": []}}
+
+
+@pytest.mark.parametrize("case", sorted(_NESTED_WRITES))
+def test_read_request_rejects_nested_writes(case):
+    """A write step nested in any sub-traversal of a read request is
+    rejected by the wire parser itself, at top level and inside a
+    ForEach body — not left for the compiler's guard to catch later."""
+    query = {"Query": {"name": "r", "steps": [{"N": "All"}] +
+                       _NESTED_WRITES[case], "condition": None}}
+    with pytest.raises(WireError, match="write step AddN"):
+        parse_request(_read_request(query))
+    foreach = {"ForEach": {"param": "p", "body": [query]}}
+    with pytest.raises(WireError, match="write step AddN"):
+        parse_request(_read_request(foreach))
+    write = dict(_read_request(query), request_type="write")
+    parse_request(write)            # the same batch is fine as a write
 
 
 def test_duplicate_spans_viral_span_stays_linear(spark):
