@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .cache import FrameCache
+from .functions.vector import sql_double
 
 ID_SHIFT = 44  # 2^44 rows per label; 2^19 labels
 _ID = "_id"
@@ -45,37 +46,59 @@ def global_id(ordinal: int, key_col):
             key_col.cast("long"))
 
 
-def _literal(value, dtype):
-    """``value`` as a Column literal of ``dtype`` (nested values recurse)."""
+def _sql_literal(value, dtype) -> str:
+    """Exact Spark SQL text of ``value`` as ``dtype`` (nested values
+    recurse), for the types ``createDataFrame`` infers."""
     if value is None:
-        return F.lit(None).cast(dtype)
+        return "NULL"
     if isinstance(dtype, T.ArrayType):
-        return F.array(*[_literal(v, dtype.elementType)
-                         for v in value]).cast(dtype)
+        return "array(" + ", ".join(_sql_literal(v, dtype.elementType)
+                                    for v in value) + ")"
     if isinstance(dtype, T.MapType):
-        return F.create_map(*[c for k, v in value.items()
-                              for c in (_literal(k, dtype.keyType),
-                                        _literal(v, dtype.valueType))]
-                            ).cast(dtype)
+        return "map(" + ", ".join(
+            _sql_literal(k, dtype.keyType) + ", "
+            + _sql_literal(v, dtype.valueType)
+            for k, v in value.items()) + ")"
     if isinstance(dtype, T.StructType):
         vals = ([value.get(f.name) for f in dtype.fields]
                 if isinstance(value, dict) else list(value))
-        return F.struct(*[_literal(v, f.dataType).alias(f.name)
-                          for v, f in zip(vals, dtype.fields)])
-    return F.lit(value).cast(dtype)
+        return "named_struct(" + ", ".join(
+            _sql_string(f.name) + ", " + _sql_literal(v, f.dataType)
+            for v, f in zip(vals, dtype.fields)) + ")"
+    if isinstance(dtype, T.BooleanType):
+        return "true" if value else "false"
+    if isinstance(dtype, T.IntegralType):
+        return f"{int(value)}L"
+    if isinstance(dtype, (T.DoubleType, T.FloatType)):
+        return sql_double(value)
+    if isinstance(dtype, T.StringType):
+        return _sql_string(value)
+    if isinstance(dtype, T.BinaryType):
+        return "X'" + bytes(value).hex() + "'"
+    if isinstance(dtype, T.TimestampType):
+        return f"timestamp_micros({dtype.toInternal(value)}L)"
+    if isinstance(dtype, (T.DecimalType, T.DateType, T.TimestampNTZType)):
+        return f"CAST({_sql_string(str(value))} AS {dtype.simpleString()})"
+    raise TypeError(f"no SQL literal for {dtype.simpleString()}")
+
+
+def _sql_string(s: str) -> str:
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def literal_rows(spark: SparkSession, rows: list, schema=None) -> DataFrame:
     """A small driver-side row list as a JVM-only relation: one literal
-    array inlined over a one-row range, so no job that reads it starts a
-    Python worker (``createDataFrame(rows)`` is a Python RDD). ``schema``
-    (a StructType or DDL string) defaults to the one
-    ``createDataFrame(rows)`` infers."""
+    array, parsed from one SQL text (a fixed number of Py4J calls),
+    inlined over a one-row range, so no job that reads it starts a Python
+    worker (``createDataFrame(rows)`` is a Python RDD). ``schema`` (a
+    StructType or DDL string) defaults to the one ``createDataFrame(rows)``
+    infers."""
     if schema is None:
         schema = spark._inferSchemaFromList(rows, names=None)
     elif isinstance(schema, str):
         schema = T.StructType.fromDDL(schema)
-    rows_col = F.array(*[_literal(r, schema) for r in rows])
+    rows_col = F.expr("array(" + ", ".join(_sql_literal(r, schema)
+                                            for r in rows) + ")")
     return spark.range(0, 1, 1, 1).select(
         F.inline(rows_col.cast(T.ArrayType(schema, False))))
 

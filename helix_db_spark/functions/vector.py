@@ -15,8 +15,19 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
+def sql_double(x: float) -> str:
+    """Exact Spark SQL text of the double ``x``: ``repr`` round-trips and
+    a ``D`` literal parses with ``Double.parseDouble``."""
+    x = float(x)
+    if math.isfinite(x):
+        return repr(x) + "D"
+    return "CAST('%s' AS DOUBLE)" % (
+        "NaN" if x != x else "-Infinity" if x < 0 else "Infinity")
+
+
 def lit_vector(vec: Sequence[float]) -> Column:
-    return F.array(*[F.lit(float(x)) for x in vec])
+    """``vec`` as an ``array<double>`` literal, parsed from one SQL text."""
+    return F.expr("array(" + ", ".join(map(sql_double, vec)) + ")")
 
 
 def dot(a: Column, b: Column) -> Column:

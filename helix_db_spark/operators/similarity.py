@@ -28,7 +28,8 @@ from pyspark.sql.types import ArrayType, FloatType, LongType
 from ..cache import FrameCache, hold
 from ..catalog import _ID
 from ..functions.text import md5_long32
-from ..functions.vector import cosine_distance, cosine_similarity_cols, norm
+from ..functions.vector import (cosine_distance, cosine_similarity_cols,
+                                lit_vector, norm)
 
 _LOG = logging.getLogger(__name__)
 
@@ -1128,9 +1129,8 @@ def pq_rerank_topk(encoded: DataFrame, codebooks: list,
     codes, not vectors."""
     cand = pq_adc_topk(encoded, codebooks, query, k_results * oversample,
                        id_col, code_col)
-    qlit = F.array(*[F.lit(float(x)) for x in query])
     exact = F.aggregate(
-        F.zip_with(F.col(vec_col).cast("array<double>"), qlit,
+        F.zip_with(F.col(vec_col).cast("array<double>"), lit_vector(query),
                    lambda a, b: (a - b) * (a - b)),
         F.lit(0.0), lambda acc, x: acc + x)
     return (cand.withColumn("_distance", exact)
@@ -1545,7 +1545,7 @@ def mmr_rerank(df: DataFrame, id_col: str, vec_col: str,
     driver, so the documented bounded-driver-state exemption holds only
     while the bound is enforced IN CODE — a caller passing a
     corpus-sized pool must get an error, not a driver OOM."""
-    from ..functions.vector import cosine_similarity_exact, lit_vector
+    from ..functions.vector import cosine_similarity_exact
     if pool > MMR_MAX_POOL:
         raise ValueError(
             f"pool={pool} exceeds MMR_MAX_POOL={MMR_MAX_POOL}: the MMR "

@@ -10,8 +10,8 @@ DuckDB) can read back:
     <root>/nodes/<label>/*.parquet         one table per node label
     <root>/edges/<label>/*.parquet         primary copy, clustered by _src
     <root>/edges_by_dst/<label>/*.parquet  dst-clustered copy for in-hops
-    <root>/index/bm25/<t>__<l>__<p>/       postings + term_df bucketed by
-                                           term (store_index)
+    <root>/index/bm25/<t>__<l>__<p>/       postings bucketed by term; N,
+                                           avgdl, df in meta.json
     <root>/index/lsh/<t>__<l>__<p>/        exploded band-key rows bucketed
                                            by band key (store_index)
 
@@ -78,15 +78,16 @@ def store_index(compiler, root: str,
                 buckets: int = INDEX_BUCKETS) -> list:
     """Write on-disk bucketed layouts for every registered search index —
     the executable form of the 100 TB story the in-memory builders only
-    cache (VERDICT r4 'missing' #3).
+    cache.
 
     - text indexes (``*_text``): the BM25 postings table written
       partitioned by ``_bucket`` (md5 of term mod ``buckets``) and sorted
-      by term within files; ``term_df`` bucketed the same way; corpus
-      stats in meta.json. A query-term probe filters to its terms' buckets,
-      so partition pruning skips every other directory and the term sort
-      keeps row-group min/max skipping inside the bucket (the on-disk
-      analogue of search.build_text_index's range-partitioned cache).
+      by term within files; corpus stats and per-term document
+      frequencies (``df``) in meta.json. A query-term probe filters to its
+      terms' buckets, so partition pruning skips every other directory and
+      the term sort keeps row-group min/max skipping inside the bucket (the
+      on-disk analogue of search.build_text_index's range-partitioned
+      cache).
     - vector indexes (``*_vector``): the LSH signature table exploded to
       one (id, band key, vnorm) row per band, partitioned by ``_bucket``
       (md5 of band key mod ``buckets``). A query probes its ~16 band keys'
@@ -106,9 +107,8 @@ def store_index(compiler, root: str,
         target = "nodes" if entry.kind.startswith("node") else "edges"
         name = f"{target}__{entry.label}__{entry.property}"
         if entry.kind.endswith("_text"):
-            # an index that absorbed appends is rebuilt first: its base
-            # postings and term_df lack the appended documents
-            postings, term_df, stats = fold_text_index(
+            # an index holding appends is rebuilt first (fold_text_index)
+            postings, stats = fold_text_index(
                 compiler, entry.label, entry.property, target)
             d = os.path.join(root, "index", "bm25", name)
             (postings.withColumn("_bucket", bucket_col(F.col("term"), buckets))
@@ -116,13 +116,9 @@ def store_index(compiler, root: str,
              .sortWithinPartitions("term")
              .write.mode("overwrite").partitionBy("_bucket")
              .parquet(os.path.join(d, "postings")))
-            (term_df.withColumn("_bucket", bucket_col(F.col("term"), buckets))
-             .repartition(buckets, "_bucket")
-             .write.mode("overwrite").partitionBy("_bucket")
-             .parquet(os.path.join(d, "term_df")))
             atomic_write_json(os.path.join(d, "meta.json"),
                               {"N": stats["N"], "avgdl": stats["avgdl"],
-                               "buckets": buckets})
+                               "df": stats["df"], "buckets": buckets})
             written.append(d)
         elif entry.kind.endswith("_vector"):
             aug = build_lsh_index(compiler, target, entry.label,
@@ -168,15 +164,9 @@ def _load_disk_indexes(spark: SparkSession, cat: GraphCatalog,
             d = os.path.join(base, name)
             with open(os.path.join(d, "meta.json")) as fh:
                 meta = json.load(fh)
-            if key_kind == "bm25":
-                postings = spark.read.parquet(os.path.join(d, "postings"))
-                term_df = spark.read.parquet(os.path.join(d, "term_df"))
-                value = (postings, term_df,
-                         {"N": meta["N"], "avgdl": meta["avgdl"],
-                          "buckets": meta["buckets"]})
-            else:
-                value = (spark.read.parquet(os.path.join(d, parts)), meta)
-            cat._materialized.put((key_kind, target, label, prop), value)
+            cat._materialized.put((key_kind, target, label, prop),
+                                  (spark.read.parquet(os.path.join(d, parts)),
+                                   meta))
     ivf_base = os.path.join(root, "index", "ivf")
     if os.path.isdir(ivf_base):
         for name in sorted(os.listdir(ivf_base)):

@@ -4,10 +4,13 @@ rebuilt — with answers bit-equal to a rebuild."""
 
 from __future__ import annotations
 
+import datetime
+import decimal
 import os
 
 import pytest
 
+from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from helix_db_spark import P, g, write_batch
@@ -54,17 +57,18 @@ def _rebuilt(cat):
     """Answers and stats of the same catalog after a from-scratch build."""
     cat._materialized.drop(KEY)
     stats = search.build_text_index(StepCompiler(ExecContext(cat)),
-                                    "documents", "text")[2]
+                                    "documents", "text")[1]
     return {q: _topk(cat, q) for q in QUERIES}, stats
 
 
 def _assert_equals_rebuild(cat):
-    stats = cat._materialized[KEY][2]
+    stats = cat._materialized[KEY][1]
     assert stats["delta"], "expected appends held as a delta"
     got = {q: _topk(cat, q) for q in QUERIES}
-    n, avgdl = stats["N"], stats["avgdl"]
+    n, avgdl, df = stats["N"], stats["avgdl"], dict(stats["df"])
     want, fresh = _rebuilt(cat)
     assert (n, avgdl) == (fresh["N"], fresh["avgdl"])  # bit-equal stats
+    assert df == fresh["df"]
     assert got == want
 
 
@@ -83,13 +87,34 @@ def test_token_list_matches_spark_tokens(spark):
     [{"i": 1, "s": "x", "l": [1.5, None]}, {"i": None, "s": None, "l": []}],
     [{"i": 2 ** 40, "f": None, "b": False, "ls": ["a", None]},
      {"i": 3, "f": 2.0, "b": None, "ls": None}],
+    # every type the AddN/AddE path infers, at its edges
+    [{"b": True, "lo": -2 ** 63, "hi": 2 ** 63 - 1},
+     {"b": False, "lo": 0, "hi": None}],
+    [{"f": x} for x in (-0.0, float("nan"), float("inf"), float("-inf"),
+                        5e-324, 1e-300, 0.1, 1.7976931348623157e308)],
+    [{"s": "it's \\ a\\\\b \"q\" \n\ttab é 中文 😀 \\u0041 \\' %_"},
+     {"s": ""}, {"s": None}],
+    [{"t": datetime.datetime(2024, 1, 2, 3, 4, 5, 678901)},
+     {"t": datetime.datetime(1960, 12, 31, 23, 59, 59)},
+     {"t": datetime.datetime(2024, 1, 2, 3, 4, 5,
+                             tzinfo=datetime.timezone.utc)}],
+    [{"d": datetime.date(2024, 2, 29), "x": b"\x00\xff 'x'"},
+     {"d": None, "x": bytearray(b"")}],
+    [{"a": [1, 2, None], "fa": [1.5, -0.0], "sa": ["a'", None]},
+     {"a": [], "fa": None, "sa": []}],
+    [{"m": {"k'1": 1, "k2": None}, "r": Row(x=1, y="z")},
+     {"m": {}, "r": Row(x=None, y=None)}],
+    [{"n": [[1, 2], [3]], "nm": [{"a": 1.5}],
+      "dec": decimal.Decimal("-1.25")}],
+    [(1, "a"), (2, None)],
 ])
 def test_literal_rows_schema_matches_create_dataframe(spark, rows):
     want = spark.createDataFrame(rows)
-    got = literal_rows(spark, rows)
-    assert got.schema == want.schema  # names, types and nullability
-    assert sorted(map(repr, got.collect())) == \
-        sorted(map(repr, want.collect()))
+    for got in (literal_rows(spark, rows),
+                literal_rows(spark, rows, want.schema)):
+        assert got.schema == want.schema  # names, types and nullability
+        assert list(map(repr, got.collect())) == \
+            list(map(repr, want.collect()))
 
 
 def test_append_equals_rebuild(spark):
@@ -115,7 +140,7 @@ def test_append_equals_rebuild(spark):
     big = " ".join(f"t{i}" for i in range(search.BM25_DELTA_MAX - 2))
     _add_doc(eng, 900007, "zyzzyva window")
     _add_doc(eng, 900008, big)
-    assert len(cat._materialized[KEY][2]["delta"]) == search.BM25_DELTA_MAX
+    assert len(cat._materialized[KEY][1]["delta"]) == search.BM25_DELTA_MAX
     _assert_equals_rebuild(cat)
     _add_doc(eng, 900009, big)
     _add_doc(eng, 900010, "spark zyzzyva window")
@@ -125,7 +150,7 @@ def test_append_equals_rebuild(spark):
     search.build_text_index(StepCompiler(ExecContext(cat)),
                             "documents", "text")
     _add_doc(eng, 900011, "quokka quokka")
-    assert cat._materialized[KEY][2]["delta"]
+    assert cat._materialized[KEY][1]["delta"]
     eng.execute_batch(write_batch().var_as("u", g().n("documents")
                       .where(P.eq("doc_id", 900011))
                       .set_property("text", "spark")).returning("u"))

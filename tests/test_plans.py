@@ -83,19 +83,36 @@ def test_whole_stage_codegen_in_scan_filter(engine):
     assert "*(1)" in plan or "WholeStageCodegen" in plan, plan
 
 
-def test_bm25_probe_broadcasts_term_df(engine):
-    """BM25 probe shape: postings term-filter + a BROADCAST join against the
-    tiny per-term df table — shuffling postings against term_df would add a
-    full shuffle of the postings table per query at scale."""
+def test_bm25_probe_joins_nothing_and_ranks_before_attach(engine):
+    """BM25 probe shape: a query term's df is a literal map from the
+    driver-held index stats, so ``bm25_scores`` joins nothing — no shuffle
+    (or broadcast) of the postings to find df at any scale. ``text_search``
+    cuts the scores to the top k BELOW the join that attaches the label
+    frame, so that join sees k rows instead of every matching document."""
     from helix_db_spark.operators.search import bm25_scores
     from helix_db_spark.plans.compiler import ExecContext, StepCompiler
 
+    def nodes(plan):
+        """(name, node) of every optimized-plan node, pre-order; a cached
+        relation is a leaf, so its build plan is not walked."""
+        out = [(plan.nodeName(), plan)]
+        it = plan.children().iterator()
+        while it.hasNext():
+            out += nodes(it.next())
+        return out
+
     comp = StepCompiler(ExecContext(engine.catalog))
     scores = bm25_scores(comp, "documents", "text", "spark shuffle")
-    plan = _plan(scores)
-    assert "BroadcastHashJoin" in plan, plan
-    assert "SortMergeJoin" not in plan, \
-        "term_df join must broadcast, not shuffle the postings"
+    names = [n for n, _ in nodes(scores._jdf.queryExecution().optimizedPlan())]
+    assert "InMemoryRelation" in names and "Join" not in names, names
+
+    df = engine.run(g().text_search("documents", "text", "spark shuffle", 5))
+    joins = [p for n, p in nodes(df._jdf.queryExecution().optimizedPlan())
+             if n == "Join"]
+    assert len(joins) == 1, joins
+    assert "GlobalLimit" in [n for n, _ in nodes(joins[0])], \
+        "the top-k must be cut below the join that attaches the label frame"
+    assert "SortMergeJoin" not in _plan(df)
 
 
 def test_ivf_probe_broadcasts_cells_no_python_udf(engine):

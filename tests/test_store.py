@@ -172,7 +172,7 @@ def test_store_index_bucketed_probes(spark, tmp_path):
 
     assert any("/postings/" in f for f in got_text_df.inputFiles()), \
         "probe did not read the on-disk postings"
-    nb = cat2._materialized[("bm25", "nodes", "documents", "text")][2]["buckets"]
+    nb = cat2._materialized[("bm25", "nodes", "documents", "text")][1]["buckets"]
     term_buckets = {bucket_id(t, nb) for t in ("spark", "query", "filter")}
     assert partition_filter_buckets(got_text_df, "postings") == term_buckets
     assert len(term_buckets) < nb  # strictly fewer than all buckets
@@ -210,7 +210,7 @@ def test_store_index_after_appends_matches_fresh_build(spark, tmp_path):
     for i, text in enumerate(("quokka spark spark", "zyzzyva join quokka")):
         eng.execute_batch(dsl.write_batch().var_as("d", g().add_n(
             "documents", doc_id=990000 + i, text=text)).returning("d"))
-    assert cat._materialized[key][2]["delta"]
+    assert cat._materialized[key][1]["delta"]
     root = str(tmp_path / "store")
     save_catalog(cat, root, partitions=2)
     store_index(StepCompiler(ExecContext(cat)), root)
@@ -223,15 +223,15 @@ def test_store_index_after_appends_matches_fresh_build(spark, tmp_path):
                 .select(_ID, "_distance").collect()]
 
     disk = load_catalog(spark, root)
-    assert "buckets" in disk._materialized[key][2]
+    assert "buckets" in disk._materialized[key][1]
     fresh = load_catalog(spark, root)
     fresh._materialized.pop(key)  # build in memory from the stored rows
     got, want = probe(disk), probe(fresh)
     assert [i for i, _ in got] == [i for i, _ in want]
     assert [d for _, d in got] == pytest.approx([d for _, d in want],
                                                 rel=1e-12)
-    assert (disk._materialized[key][2]["N"]
-            == fresh._materialized[key][2]["N"])
+    assert (disk._materialized[key][1]["N"]
+            == fresh._materialized[key][1]["N"])
 
 
 def test_store_ivf_layout_serves_engine_probe(spark, tmp_path):
